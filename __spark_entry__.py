@@ -1078,12 +1078,15 @@ def q_streaming_cb_userfold(spark, sf_dir):
     windows only (Triggerer_CB); the oracle recomputes max − min."""
     import uuid
 
+    import numpy as np
+
     from windflow_spark.streaming import engine as se
 
     if "vrange" not in se._CB_OPS:
         se.register_cb_op(
             "vrange", n_slots=2,
-            batch=lambda g, c: [g[c].min(), g[c].max()],
+            batch=lambda v, ids, s: [np.minimum.reduceat(v, s),
+                                     np.maximum.reduceat(v, s)],
             merge=lambda o, n: [min(o[0], n[0]), max(o[1], n[1])],
             finalize=lambda s: s[1] - s[0], out_type="double",
             validate_with=[3.0, -1.5, 8.25, 0.0, 4.5, 2.0],

@@ -491,8 +491,9 @@ def test_repetition_features_hand_fixture(spark):
         (2, "x y\nx y\nz"),        # dup lines: 3 lines, 2 distinct
         (3, ""),                   # empty: [''] -> 1.0, no bigrams -> NULL
         (4, "w"),                  # single token: 1.0, no bigrams
+        (5, None),                 # null doc: null features, no crash
     ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    df = spark.createDataFrame(rows, "doc_id long, text string")
     got = (
         text.repetition_features(df)
         .orderBy("doc_id")
@@ -510,6 +511,7 @@ def test_repetition_features_hand_fixture(spark):
     assert got.loc[3, "dup_line_char_frac"] == 0.0
     assert got.loc[4, "top_token_frac"] == 1.0
     assert pd.isna(got.loc[4, "top_bigram_frac"])
+    assert got.loc[5].isna().all()
 
 
 def test_repetition_features_plan_is_shuffle_free(docs):

@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -634,7 +635,8 @@ def test_stream_cb_tws_general_aggs_match_classic(spark, tx_path):
     spec = WinSpec("cb", 10, 5)
     se.register_cb_op(
         "vrange_tws_t", n_slots=2,
-        batch=lambda g, c: [g[c].min(), g[c].max()],
+        batch=lambda v, ids, s: [np.minimum.reduceat(v, s),
+                                 np.maximum.reduceat(v, s)],
         merge=lambda o, n: [min(o[0], n[0]), max(o[1], n[1])],
         finalize=lambda s: s[1] - s[0], out_type="double",
         validate_with=[3.0, -1.5, 8.25, 0.0, 4.5],
@@ -695,9 +697,7 @@ def test_cb_fold_rejects_nan_values():
 
     from windflow_spark.streaming.engine import _make_cb_fold
 
-    fold = _make_cb_fold(
-        4, 4, {"s": ("sum", "v"), "c": ("count", None)}, ["v"]
-    )
+    fold = _make_cb_fold(4, 4, {"s": ("sum", "v"), "c": ("count", None)})
     open_w: dict = {}
     fired = fold(np.arange(4), {"v": np.ones(4)}, open_w)
     assert fired == [(0, 4.0, 4, 3)]
@@ -755,6 +755,143 @@ def test_stream_cb_eos_flush_restores_batch_parity(spark, tx_path, tdir):
     cols = ["conv_id", "gwid", "s", "c", "mn", "mx", "avg", "am",
             "vr", "sd", "win_end"]
     assert_frames_equal(got[cols], want[cols], ["conv_id", "gwid"])
+
+
+@pytest.fixture
+def multi_chunk_batch(spark, tdir):
+    """One micro-batch of four files whose sizes grow with ts, each
+    key's turns spread over all of them, read back in Arrow chunks of 50
+    rows. Spark plans the files largest first, so every key reaches
+    its stateful processor as several chunks out of id order."""
+    keys, turns = 4, 300
+    turn = np.tile(np.arange(turns, dtype=np.int64), keys)
+    conv = np.repeat(np.arange(keys), turns)
+    pdf = pd.DataFrame({
+        "conv_id": [f"k{c}" for c in conv],
+        "turn_idx": turn,
+        "v": ((turn * 7 + conv * 3) % 11).astype(np.float64),
+        "text": "pad",  # a column no processor reads
+    }).sort_values(["turn_idx", "conv_id"], kind="stable")
+    path = str(tdir / "multi_chunk_src")
+    os.makedirs(path, exist_ok=True)
+    for k, (a, b) in enumerate([(0, 100), (100, 300), (300, 600), (600, 1200)]):
+        datagen.write_parquet_us(pdf.iloc[a:b], f"{path}/part-{k}.parquet")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "50")
+    try:
+        yield path
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_stream_cb_multi_chunk_batch_equals_batch(spark, tdir, multi_chunk_batch):
+    """Regression: a key whose rows straddle Arrow chunks out of id
+    order in one micro-batch must not lose rows to the drop rule — the
+    processor sorts and folds each key once per batch. fired ∪ flushed
+    == the batch win_seq result, partial windows included."""
+    path = multi_chunk_batch
+    spec = WinSpec("cb", 8, 4)
+    aggs = {"s": ("sum", "v"), "c": ("count", None), "am": ("argmax", "v")}
+    src = se.stream_source(spark, path, spark.read.parquet(path).schema)
+    stream = se.stream_cb_windows(src, "conv_id", "turn_idx", None, spec, aggs=aggs)
+    sink, ckpt = str(tdir / "multi_chunk_sink"), str(tdir / "multi_chunk_ckpt")
+    se.run_available_now(stream, sink, ckpt, timeout_sec=300)
+    fired = spark.read.parquet(sink)
+    flushed = se.flush_cb_partials(spark, ckpt, "conv_id", spec, aggs=aggs)
+    got = fired.unionByName(flushed).toPandas()
+    want = win_seq(
+        spark.read.parquet(path), ["conv_id"], "turn_idx", spec,
+        aggs={
+            "s": F.sum("v"), "c": F.count(F.lit(1)),
+            "_mb": F.max(F.struct(F.col("v").alias("v"),
+                                  (-F.col("turn_idx")).alias("ni"))),
+        },
+    ).withColumn("am", (-F.col("_mb.ni")).cast("long")).drop("_mb").toPandas()
+    cols = ["conv_id", "gwid", "s", "c", "am", "win_end"]
+    assert len(want) == 4 * 75
+    assert_frames_equal(got[cols], want[cols], ["conv_id", "gwid"])
+
+
+def test_stream_accumulate_multi_chunk_batch(spark, multi_chunk_batch):
+    """Running sums follow id order even when a key's rows reach the
+    processor as several out-of-order Arrow chunks."""
+    from windflow_spark.operators.core import accumulate
+
+    path = multi_chunk_batch
+    src = se.stream_source(spark, path, spark.read.parquet(path).schema)
+    stream = se.stream_accumulate(src, "conv_id", "turn_idx", "v")
+    got = se.run_to_memory(stream, "t_acc_chunks", spark, output_mode="append").toPandas()
+    want = accumulate(
+        spark.read.parquet(path), ["conv_id"], ["turn_idx"],
+        {"running_sum": F.sum("v"), "running_cnt": F.count(F.lit(1))},
+    ).select("conv_id", "turn_idx", "running_sum", "running_cnt").toPandas()
+    assert len(got) == len(want) == 1200
+    assert_frames_equal(got, want, ["conv_id", "turn_idx"])
+
+
+def test_cb_fold_kernels_match_per_window_reference():
+    """Property check of the numpy batch-kernel contract: for random
+    sparse ids folded in two spans (so partials also merge), every
+    registry op — hll64 and a histq included — equals a plain
+    per-window reference over the window's members, on tumbling,
+    sliding and hopping (win < slide: ids in gaps fold nowhere) specs.
+    Values are small integers, so argmax ties are common and must keep
+    the smallest id; some fall outside the histogram's range (edge
+    buckets), and hll inputs repeat (registers take the max)."""
+    name = "histq_t_prop"
+    se.register_quantile_hist_op(name, lo=1.0, hi=7.0, bins=4, q=0.5)
+    try:
+        ops = ["sum", "count", "min", "max", "mean", "argmax", "var",
+               "std", "hll64", name]
+        aggs = {op: (op, "h" if op == "hll64" else "v") for op in ops}
+        aggs["count"] = ("count", None)
+        hist_fin = se._CB_OPS[name][3]
+        rng = np.random.default_rng(11)
+        pool = rng.integers(0, 1 << 24, 6)
+        for case in range(60):
+            win, slide = [(6, 6), (8, 3), (3, 7), (5, 2), (1, 4)][case % 5]
+            ids = np.sort(rng.choice(120, size=rng.integers(1, 60), replace=False))
+            vals = {"v": rng.integers(0, 9, len(ids)).astype(np.float64),
+                    "h": rng.choice(pool, len(ids)).astype(np.float64)}
+            fold = se._make_cb_fold(win, slide, aggs)
+            open_w: dict = {}
+            cut = int(rng.integers(0, len(ids) + 1))
+            got = {}
+            for part in (slice(0, cut), slice(cut, None)):
+                if len(ids[part]):
+                    for w, *outs, _end in fold(
+                        ids[part], {c: x[part] for c, x in vals.items()}, open_w
+                    ):
+                        got[w] = outs
+            for w, p in open_w.items():
+                got[w] = se._cb_finalize(se._cb_ops(aggs), p)
+            want = {}
+            for w in range(int(ids[-1]) // slide + 1):
+                m = (ids >= w * slide) & (ids < w * slide + win)
+                if not m.any():
+                    continue
+                v, i, h = vals["v"][m], ids[m], vals["h"][m].astype(np.int64)
+                regs = np.zeros(64)
+                for x in h:
+                    b, r = (x >> 16) & 63, 17 - int(x & 0xFFFF).bit_length()
+                    regs[b] = max(regs[b], r)
+                hist = np.zeros(4)
+                for x in v:
+                    hist[min(3, max(0, int((x - 1) // 1.5)))] += 1
+                want[w] = [v.sum(), len(v), v.min(), v.max(), v.mean(),
+                           int(i[v == v.max()].min()), v.var(), v.std(),
+                           se._hll_final(list(regs)), hist_fin(list(hist))]
+            assert sorted(got) == sorted(want), (case, win, slide)
+            for w in want:
+                np.testing.assert_allclose(got[w], want[w], rtol=1e-9, atol=1e-9,
+                                           err_msg=f"case {case} window {w}")
+        bad = {c: x.copy() for c, x in vals.items()}
+        bad["v"][0] = np.nan
+        with pytest.raises(ValueError, match="NaN"):
+            fold(ids, bad, {})
+    finally:
+        del se._CB_OPS[name]
 
 
 def test_stream_tb_eos_flush_restores_batch_parity(spark, tx_path, tdir):
@@ -982,11 +1119,11 @@ def test_register_cb_op_user_fold_end_to_end(spark, tx_path, tdir):
     transparently route through the mapInPandas arm): fired ∪ flushed
     == batch win_seq including partials."""
 
-    def _argmin_batch(g, c):
-        df = g.obj.sort_values([c, "_id"], ascending=[True, True],
-                               kind="stable")
-        f = df.groupby("_w", sort=True).first()
-        return [f[c], f["_id"].astype("float64")]
+    def _argmin_batch(v, ids, s):
+        m = np.minimum.reduceat(v, s)
+        seg = np.repeat(np.arange(len(s)), np.diff(s, append=len(v)))
+        best = np.minimum.reduceat(np.where(v == m[seg], ids, ids.max() + 1), s)
+        return [m, best.astype("float64")]
 
     def _argmin_merge(o, n):
         return list(n) if n[0] < o[0] or (n[0] == o[0] and n[1] < o[1]) \
@@ -1037,8 +1174,8 @@ def test_register_cb_op_rejects_non_decomposable():
     reproduce the whole-sample fold (median with mean-of-medians merge)
     is rejected at registration, not silently wrong at runtime."""
 
-    def _median_batch(g, c):
-        return [g[c].median()]
+    def _median_batch(v, ids, s):
+        return [np.array([np.median(w) for w in np.split(v, s[1:])])]
 
     with pytest.raises(ValueError, match="not decomposable"):
         se.register_cb_op(
@@ -1177,12 +1314,9 @@ def test_hll_fold_mergeable_dup_insensitive_accurate():
     import numpy as np
 
     def regs(vals):
-        frame = pd.DataFrame(
-            {"_w": np.zeros(len(vals), dtype=np.int64),
-             "_id": np.arange(len(vals)), "v": np.asarray(vals, dtype=np.float64)}
-        )
-        g = frame.groupby("_w", sort=True)
-        return [float(s.loc[0]) for s in se._hll_batch(g, "v")]
+        regs = se._hll_batch(np.asarray(vals, dtype=np.float64),
+                             np.arange(len(vals)), np.zeros(1, dtype=np.int64))
+        return [float(r[0]) for r in regs]
 
     for n in (40, 300, 3000, 30000):
         vals = [_hll_prep_py(i * 7919 + 13) for i in range(n)]
@@ -1263,24 +1397,19 @@ def test_quantile_hist_fold_registration_and_semantics():
         assert n_slots == 50 and out_t == "double" and cat is None
         rng = np.random.default_rng(3)
         vals = rng.uniform(0, 100, 500)
-        frame = pd.DataFrame(
-            {"_w": np.zeros(500, dtype=np.int64), "_id": np.arange(500),
-             "v": vals}
-        )
-        g = frame.groupby("_w", sort=True)
-        whole = [float(s.loc[0]) for s in batch(g, "v")]
+        ids, one = np.arange(500), np.zeros(1, dtype=np.int64)
+
+        def slots(lo, hi):
+            return [float(x[0]) for x in batch(vals[lo:hi], ids[lo:hi], one)]
+
+        whole = slots(0, 500)
         # merge of halves == whole (exact integer counts)
-        g1 = frame.iloc[:250].groupby("_w", sort=True)
-        g2 = frame.iloc[250:].groupby("_w", sort=True)
-        merged = merge([float(s.loc[0]) for s in batch(g1, "v")],
-                       [float(s.loc[0]) for s in batch(g2, "v")])
-        assert merged == whole
+        assert merge(slots(0, 250), slots(250, 500)) == whole
         est = fin(whole)
         assert abs(est - np.quantile(vals, 0.5)) <= 2.0 + 1e-9  # one bucket
         # clamping: out-of-range values land in edge buckets
-        f2 = pd.DataFrame({"_w": [0, 0], "_id": [0, 1], "v": [-5.0, 1e6]})
-        s2 = batch(f2.groupby("_w", sort=True), "v")
-        assert float(s2[0].loc[0]) == 1.0 and float(s2[49].loc[0]) == 1.0
+        s2 = batch(np.array([-5.0, 1e6]), np.arange(2), one)
+        assert float(s2[0][0]) == 1.0 and float(s2[49][0]) == 1.0
     finally:
         del se._CB_OPS[name]
 

@@ -54,6 +54,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+import numpy as np  # noqa: E402
 import pandas as pd  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -90,7 +91,8 @@ def verify_tws(spark) -> str:
     if "vrange" not in se._CB_OPS:
         se.register_cb_op(
             "vrange", n_slots=2,
-            batch=lambda g, c: [g[c].min(), g[c].max()],
+            batch=lambda v, ids, s: [np.minimum.reduceat(v, s),
+                                     np.maximum.reduceat(v, s)],
             merge=lambda o, n: [min(o[0], n[0]), max(o[1], n[1])],
             finalize=lambda s: s[1] - s[0], out_type="double",
             validate_with=[3.0, -1.5, 8.25, 0.0, 4.5],

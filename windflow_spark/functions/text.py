@@ -165,6 +165,8 @@ def repetition_features(df: DataFrame, text_col: str = "text") -> DataFrame:
       Gopher's variant counts all occurrences of any repeated line —
       this one is cheaper and monotone in the same signal).
 
+    A null text gets null features (the SQL reading of "undefined").
+
     Mode frequencies come from the longest equal-run of the SORTED
     token/bigram array (`_max_run`) — linear, codegen'd, no shuffle.
     All fractions rounded to 6 places (engine/oracle float contract).
@@ -220,6 +222,9 @@ def repetition_features(df: DataFrame, text_col: str = "text") -> DataFrame:
         for pdf in batches:
             rows = []
             for t in pdf[text_col]:
+                if not isinstance(t, str):  # null doc → null features
+                    rows.append((None,) * len(feat_cols))
+                    continue
                 toks = _split(t.strip(_ws))
                 n = len(toks)
                 counts = Counter(toks)

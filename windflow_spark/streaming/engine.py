@@ -29,6 +29,7 @@ from __future__ import annotations
 import json
 from collections.abc import Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -278,16 +279,34 @@ def stream_session(
 # beyond scalar semigroups, var/std beyond two slots). Users extend it
 # with register_cb_op(), which property-checks the declared fold for
 # decomposability before admitting it.
+#
+# Batch kernel contract: ``kernel(v, ids, starts)`` over one key's
+# expanded rows sorted by window id — ``v`` the in_col values (None for
+# a fold over no column), ``ids`` the tuple ids, ``starts`` the first
+# row of each window's segment (rows inside a segment are in ascending
+# id order). It returns ``n_slots`` arrays (or an (n_slots, windows)
+# array) holding one partial per window: np.<ufunc>.reduceat(v, starts)
+# for ufunc folds, np.<ufunc>.at over ``_seg_of(starts, n)`` for
+# scatter folds.
 
 
-def _argmax_batch(g, c):
+def _seg_of(starts, n: int):
+    """Segment (window) index of each of the ``n`` window-sorted rows."""
+    return np.repeat(np.arange(len(starts)), np.diff(starts, append=n))
+
+
+def _count_batch(v, ids, s):
+    return [np.diff(s, append=len(ids)).astype(np.float64)]
+
+
+def _argmax_batch(v, ids, s):
     """Per-window argmax partials: (max value, id attaining it) with
-    smallest-id tiebreak. Vectorized via a (value DESC, id ASC) sort +
-    groupby-first over the fold frame (``g.obj`` — the frame always
-    carries the per-key monotone id as ``_id``)."""
-    df = g.obj.sort_values([c, "_id"], ascending=[False, True], kind="stable")
-    f = df.groupby("_w", sort=True).first()
-    return [f[c], f["_id"].astype("float64")]
+    smallest-id tiebreak — the min id over each window's max-valued
+    rows."""
+    m = np.maximum.reduceat(v, s)
+    hit = v == m[_seg_of(s, len(v))]
+    best = np.minimum.reduceat(np.where(hit, ids, np.iinfo(np.int64).max), s)
+    return [m, best.astype(np.float64)]
 
 
 def _argmax_merge(o, n):
@@ -296,12 +315,12 @@ def _argmax_merge(o, n):
     return list(n) if n[0] > o[0] or (n[0] == o[0] and n[1] < o[1]) else list(o)
 
 
-def _var_batch(g, c):
+def _var_batch(v, ids, s):
     """(sum, sum-of-squares, count) partials — the three-slot
     decomposable triple behind var/std (population variance via the
     E[x²]−E[x]² identity; merge is slot-wise addition)."""
-    sq = g.obj.assign(_sq=g.obj[c] * g.obj[c]).groupby("_w", sort=True)["_sq"].sum()
-    return [g[c].sum(), sq, g.size().astype("float64")]
+    return [np.add.reduceat(v, s), np.add.reduceat(v * v, s),
+            *_count_batch(v, ids, s)]
 
 
 def _var_merge(o, n):
@@ -350,25 +369,15 @@ def hll_prep(col) -> "F.Column":
     return F.conv(F.substring(F.md5(c.cast("string")), 1, 6), 16, 10).cast("long")
 
 
-def _hll_batch(g, c):
-    import numpy as np
-
-    df = g.obj
-    v = df[c].to_numpy(dtype=np.float64).astype(np.int64)  # ≤ 2^24: exact
-    b = (v >> 16) & 63
-    x = (v & 0xFFFF).astype(np.float64)
-    # bit_length via frexp's exponent (exact for ints < 2^24); x == 0
-    # keeps exponent 0 → register 17, the all-zero-tail convention
-    rank = (17 - np.frexp(x)[1]).astype(np.float64)
-    t = pd.DataFrame({"_w": df["_w"].to_numpy(), "_b": b, "_r": rank})
-    mx = (
-        t.groupby(["_w", "_b"], sort=True)["_r"]
-        .max()
-        .unstack("_b", fill_value=0.0)
-        .reindex(columns=range(_HLL_M), fill_value=0.0)
-        .reindex(index=g.size().index, fill_value=0.0)
-    )
-    return [mx[j] for j in range(_HLL_M)]
+def _hll_batch(v, ids, s):
+    h = v.astype(np.int64)  # ≤ 2^24: exact
+    # bit_length via frexp's exponent (exact for ints < 2^24); a zero
+    # rank field keeps exponent 0 → register 17, the all-zero-tail
+    # convention
+    rank = 17.0 - np.frexp((h & 0xFFFF).astype(np.float64))[1]
+    regs = np.zeros((_HLL_M, len(s)))
+    np.maximum.at(regs, ((h >> 16) & 63, _seg_of(s, len(v))), rank)
+    return regs
 
 
 def _hll_merge(o, n):
@@ -400,32 +409,29 @@ def _hll_cat(p, i):
 
 
 _CB_OPS = {
-    # op: (n_slots,
-    #      batch_kernel(frame_groupby, in_col) -> list of per-slot
-    #          Series indexed by window id (the groupby frame carries
-    #          the fold's value columns plus "_id" = the tuple id),
-    #      merge(old_slots, new_slots), finalize(slots),
-    #      out_sql_type,
+    # op: (n_slots, batch_kernel(v, ids, starts) -> per-window slot
+    #      arrays (contract above), merge(old_slots, new_slots),
+    #      finalize(slots), out_sql_type,
     #      catalyst_finalize(parts_array_col, slot_pos) -> Column —
     #          the same finalize over the persisted slot layout, used
     #          by flush_cb_partials' pure-Catalyst EOS projection)
-    # count uses size() (true row count, null-insensitive) — the
-    # reference's per-row fold counts EVERY tuple; null/NaN values in
-    # other ops' input columns are rejected at the operator boundary
-    # (_make_cb_fold) rather than silently skipped, so pandas skipna
-    # semantics can't diverge from the reference fold.
-    "sum": (1, lambda g, c: [g[c].sum()], lambda o, n: [o[0] + n[0]],
-            lambda s: s[0], "double", lambda p, i: p[i]),
-    "count": (1, lambda g, c: [g.size().astype("float64")],
-              lambda o, n: [o[0] + n[0]], lambda s: int(s[0]), "long",
-              lambda p, i: p[i]),
-    "min": (1, lambda g, c: [g[c].min()],
+    # count is the segment length (every tuple — the reference's
+    # per-row fold counts EVERY tuple); null/NaN values in other ops'
+    # input columns are rejected at the operator boundary
+    # (_make_cb_fold) rather than folded, so a NaN can't silently
+    # diverge from the reference fold.
+    "sum": (1, lambda v, i, s: [np.add.reduceat(v, s)],
+            lambda o, n: [o[0] + n[0]], lambda s: s[0], "double",
+            lambda p, i: p[i]),
+    "count": (1, _count_batch, lambda o, n: [o[0] + n[0]],
+              lambda s: int(s[0]), "long", lambda p, i: p[i]),
+    "min": (1, lambda v, i, s: [np.minimum.reduceat(v, s)],
             lambda o, n: [min(o[0], n[0])], lambda s: s[0], "double",
             lambda p, i: p[i]),
-    "max": (1, lambda g, c: [g[c].max()],
+    "max": (1, lambda v, i, s: [np.maximum.reduceat(v, s)],
             lambda o, n: [max(o[0], n[0])], lambda s: s[0], "double",
             lambda p, i: p[i]),
-    "mean": (2, lambda g, c: [g[c].sum(), g.size().astype("float64")],
+    "mean": (2, lambda v, i, s: [np.add.reduceat(v, s), *_count_batch(v, i, s)],
              lambda o, n: [o[0] + n[0], o[1] + n[1]],
              lambda s: s[0] / s[1], "double",
              lambda p, i: p[i] / p[i + 1]),
@@ -469,10 +475,13 @@ def register_cb_op(
     built-ins (they all read the same registry).
 
     - ``n_slots``: float64 partial slots per window.
-    - ``batch(g, col)``: the per-Arrow-batch kernel — receives the
-      fold frame's pandas groupby over window id ``_w`` (the frame
-      carries the value columns plus ``_id`` = the tuple id) and
-      returns a list of ``n_slots`` Series indexed by window id.
+    - ``batch(v, ids, starts)``: the numpy segment kernel — receives
+      one key's rows sorted by window id (``v`` the input column's
+      float64 values, ``ids`` the int64 tuple ids, ``starts`` the
+      first row of each window's segment) and returns ``n_slots``
+      arrays with one partial per window, e.g.
+      ``[np.minimum.reduceat(v, starts)]`` (see the contract above
+      ``_CB_OPS``).
     - ``merge(old_slots, new_slots) -> slots``: cross-batch partial
       merge (lists of floats).
     - ``finalize(slots) -> value`` with SQL type ``out_type``.
@@ -493,23 +502,17 @@ def register_cb_op(
     if name in _CB_OPS:
         raise ValueError(f"CB op {name!r} already registered")
     if validate_with is not None:
-        import numpy as np
-
         sample = np.asarray(validate_with, dtype=np.float64)
         if sample.ndim != 1 or len(sample) < 2:
             raise ValueError("validate_with must be a 1-D sample with >= 2 values")
 
         def _partials(vals, ids):
-            frame = pd.DataFrame(
-                {"_w": np.zeros(len(vals), dtype=np.int64), "_id": ids,
-                 "_v": vals}
-            )
-            out = batch(frame.groupby("_w", sort=True), "_v")
+            out = batch(vals, ids, np.zeros(1, dtype=np.int64))
             if len(out) != n_slots:
                 raise ValueError(
                     f"batch kernel returned {len(out)} slots, declared {n_slots}"
                 )
-            return [float(s.loc[0]) for s in out]
+            return [float(np.asarray(x)[0]) for x in out]
 
         ids = np.arange(len(sample), dtype=np.int64)
         whole = _partials(sample, ids)
@@ -562,27 +565,16 @@ def register_quantile_hist_op(
 
     Returns the literals dict {lo, hi, bins, w, q} so gates/oracles
     embed the exact same floats."""
-    import numpy as np
-
     lo_, hi_, q_ = float(lo), float(hi), float(q)
     if not (hi_ > lo_ and bins >= 2 and 0.0 < q_ < 1.0):
         raise ValueError("need hi > lo, bins >= 2, 0 < q < 1")
     w = (hi_ - lo_) / bins
 
-    def batch(g, c):
-        df = g.obj
-        v = df[c].to_numpy(dtype=np.float64)
+    def batch(v, ids, s):
         b = np.clip(np.floor((v - lo_) / w), 0, bins - 1).astype(np.int64)
-        t = pd.DataFrame({"_w": df["_w"].to_numpy(), "_b": b})
-        mx = (
-            t.groupby(["_w", "_b"], sort=True)
-            .size()
-            .astype("float64")
-            .unstack("_b", fill_value=0.0)
-            .reindex(columns=range(bins), fill_value=0.0)
-            .reindex(index=g.size().index, fill_value=0.0)
-        )
-        return [mx[j] for j in range(bins)]
+        n = len(s)
+        cnt = np.bincount(b * n + _seg_of(s, len(v)), minlength=bins * n)
+        return cnt.reshape(bins, n).astype(np.float64)
 
     def merge(o, n):
         return [a + b for a, b in zip(o, n)]
@@ -610,21 +602,39 @@ def register_quantile_hist_op(
     return {"lo": lo_, "hi": hi_, "bins": bins, "w": w, "q": q_}
 
 
-def _make_cb_fold(win: int, slide: int, aggs: dict, in_cols: list[str]):
+def _cb_ops(aggs: dict) -> list:
+    """The registry entries of ``aggs`` in declaration order, paired
+    with their input columns. Closures take this list, never the
+    registry itself: it travels to the workers by value, user-registered
+    ops included."""
+    return [(_CB_OPS[op], c) for op, c in aggs.values()]
+
+
+def _cb_finalize(ops: list, part) -> list:
+    """Finalized output values of one window's partial slots."""
+    outs, pos = [], 0
+    for (ns, _k, _m, fin, *_), _c in ops:
+        outs.append(fin(list(part[pos:pos + ns])))
+        pos += ns
+    return outs
+
+
+def _make_cb_fold(win: int, slide: int, aggs: dict):
     """Build the vectorized CB fold kernel shared by stream_cb_windows
     (applyInPandasWithState) and stream_cb_windows_tws
     (transformWithStateInPandas): fold sorted ids into open windows,
     return fired (gwid, finalized..., win_end) rows. Fully vectorized —
-    the wid explosion is arange arithmetic, partials one pandas groupby.
+    the wid explosion is arange arithmetic, stable-sorted by window id;
+    every registry kernel then reduces numpy segments (``batch(v, ids,
+    starts)``, see the contract above ``_CB_OPS``) — no pandas.
 
-    Columns feeding a non-count fold must be null/NaN-free: a NaN would
-    silently vanish under pandas skipna while the reference's per-row
-    fold propagates it, so the kernel raises instead."""
-    import numpy as np
-
+    Columns feeding a non-count fold must be null/NaN-free: SQL
+    aggregates skip a null while the numpy kernels would propagate a
+    NaN (or, for hll64, hash garbage), so the kernel raises instead."""
     strict_cols = sorted(
         {c for op, c in aggs.values() if c is not None and op != "count"}
     )
+    ops = _cb_ops(aggs)
 
     def _fold(ids: "np.ndarray", vals: dict, open_w: dict) -> list:
         for c in strict_cols:
@@ -640,47 +650,69 @@ def _make_cb_fold(win: int, slide: int, aggs: dict, in_cols: list[str]):
         # empty wid range (includes/win_seq.hpp:326-338), clip to 0
         counts = np.maximum(0, last - first + 1).astype(np.int64)
         total = int(counts.sum())
-        row_idx = np.repeat(np.arange(len(ids)), counts)
-        offs = np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
-        wid = first[row_idx] + offs
-        # the frame always carries the tuple id (_id) so order-aware
-        # ops (argmax) can reach it; kernels receive the frame groupby
-        frame = {"_w": wid, "_id": ids[row_idx]}
-        for c in in_cols:
-            frame[c] = vals[c][row_idx]
-        g = pd.DataFrame(frame).groupby("_w", sort=True)
-        slot_series = []
-        for op, c in aggs.values():
-            slot_series += _CB_OPS[op][1](g, c)
-        wkeys = slot_series[0].index.to_numpy()
-        mat = np.column_stack([s.to_numpy() for s in slot_series])
-        for w, new in zip(wkeys, mat):
-            old = open_w.get(int(w))
-            if old is None:
-                open_w[int(w)] = list(new)
-            else:
+        if total:  # an empty expansion would still make one segment
+            row_idx = np.repeat(np.arange(len(ids)), counts)
+            offs = np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
+            wid = first[row_idx] + offs
+            # stable: ids stay ascending inside each window's segment
+            order = np.argsort(wid, kind="stable")
+            wid, row_idx = wid[order], row_idx[order]
+            starts = np.flatnonzero(np.concatenate(([True], wid[1:] != wid[:-1])))
+            seg_ids = ids[row_idx]
+            seg_v = {c: v[row_idx] for c, v in vals.items()}
+            mat = np.vstack([
+                np.asarray(kern(seg_v.get(c), seg_ids, starts), dtype=np.float64)
+                .reshape(ns, -1)
+                for (ns, kern, *_), c in ops
+            ]).T
+            for w, new in zip(wid[starts].tolist(), mat.tolist()):
+                old = open_w.get(w)
+                if old is None:
+                    open_w[w] = new
+                    continue
                 merged, pos = [], 0
-                for op, _c in aggs.values():
-                    ns = _CB_OPS[op][0]
-                    merged += _CB_OPS[op][2](old[pos:pos + ns], list(new[pos:pos + ns]))
+                for (ns, _k, merge, *_), _c in ops:
+                    merged += merge(old[pos:pos + ns], new[pos:pos + ns])
                     pos += ns
-                open_w[int(w)] = merged
+                open_w[w] = merged
         # Triggerer_CB: fire windows whose last tuple is in this span
         fired = []
         f_mask = (ids - win + 1 >= 0) & ((ids - win + 1) % slide == 0)
         for w in ((ids[f_mask] - win + 1) // slide).tolist():
             part = open_w.pop(w, None)
-            if part is None:
-                continue
-            outs, pos = [], 0
-            for op, _c in aggs.values():
-                ns = _CB_OPS[op][0]
-                outs.append(_CB_OPS[op][3](part[pos:pos + ns]))
-                pos += ns
-            fired.append((w, *outs, w * slide + win - 1))
+            if part is not None:
+                fired.append((w, *_cb_finalize(ops, part), w * slide + win - 1))
         return fired
 
     return _fold
+
+
+def _drop_seen(ids: "np.ndarray", vals: dict, last_id: int):
+    """The reference's out-of-order drop rule over id-sorted rows: drop
+    ids at or below the last folded one, and repeated ids (first
+    occurrence wins)."""
+    keep = ids > last_id
+    keep[1:] &= ids[1:] != ids[:-1]
+    return ids[keep], {c: v[keep] for c, v in vals.items()}
+
+
+def _key_rows(pdfs: Iterator[pd.DataFrame], id_col: str, cols: list[str]):
+    """One key's rows of a micro-batch as numpy arrays, sorted by id
+    ONCE across all of its Arrow chunks (a multi-file micro-batch can
+    hand the chunks over in any id order)."""
+    chunks = [p for p in pdfs if len(p)]
+    ids = np.concatenate(
+        [p[id_col].to_numpy(dtype=np.int64) for p in chunks]
+        or [np.empty(0, dtype=np.int64)]
+    )
+    order = np.argsort(ids, kind="stable")
+    vals = {
+        c: np.concatenate(
+            [p[c].to_numpy(dtype=np.float64) for p in chunks] or [np.empty(0)]
+        )[order]
+        for c in cols
+    }
+    return ids[order], vals
 
 
 def stream_cb_windows(
@@ -694,7 +726,10 @@ def stream_cb_windows(
     lateness: int = 0,
 ) -> DataFrame:
     """Count-based windows in streaming: keyed stateful processor via
-    applyInPandasWithState, numpy-vectorized per Arrow batch.
+    applyInPandasWithState over the input projected to (key, id_col,
+    fold columns); each key's rows of a micro-batch are sorted by id
+    and folded ONCE, across all of its Arrow chunks, by numpy segment
+    kernels.
 
     A tuple with per-key monotone id ``i`` belongs to wids
     [max(0, floor((i-win)/slide)+1), floor(i/slide)]; window w fires
@@ -723,7 +758,7 @@ def stream_cb_windows(
       watermark delay).
     - "assume_ordered": trust per-key arrival order across batches
       (single-writer sources); cheapest, silently wrong under disorder.
-    Within a batch, rows are always processed in id order.
+    Within a micro-batch, a key's rows are always processed in id order.
     """
     if on_late not in ("assume_ordered", "drop", "buffer"):
         raise ValueError(f"unknown on_late policy {on_late!r}")
@@ -734,8 +769,6 @@ def stream_cb_windows(
     for name, (op, _c) in aggs.items():
         if op not in _CB_OPS:
             raise ValueError(f"agg {name!r}: unknown op {op!r} (have {sorted(_CB_OPS)})")
-    import numpy as np
-
     win, slide = spec.win, spec.slide
     # input columns feeding any fold (count-with-None folds over ids)
     in_cols = sorted({c for _, c in aggs.values() if c is not None})
@@ -747,61 +780,41 @@ def stream_cb_windows(
         "wids array<long>, parts array<array<double>>, last_id long, "
         "buf_ids array<long>, buf_vals array<array<double>>"
     )
-    _fold = _make_cb_fold(win, slide, aggs, in_cols)
+    _fold = _make_cb_fold(win, slide, aggs)
 
     def proc(
         k: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        ids, vals = _key_rows(pdfs, id_col, in_cols)
         if state.exists:
             wids, parts, last_id, buf_ids, buf_vals = state.get
             open_w = {w: list(p) for w, p in zip(wids, parts)}
-            buf_i = np.asarray(buf_ids, dtype=np.int64)
-            buf_v = {c: np.asarray(v, dtype=np.float64)
-                     for c, v in zip(in_cols, buf_vals)}
         else:
-            open_w, last_id = {}, -1
-            buf_i = np.empty(0, dtype=np.int64)
-            buf_v = {c: np.empty(0) for c in in_cols}
-        fired = []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            vals = {c: pdf[c].to_numpy(dtype=np.float64) for c in in_cols}
+            open_w, last_id, buf_ids, buf_vals = {}, -1, [], [[] for _ in in_cols]
+        if on_late == "buffer":
+            ids = np.concatenate([np.asarray(buf_ids, dtype=np.int64), ids])
+            vals = {c: np.concatenate([np.asarray(b, dtype=np.float64), vals[c]])
+                    for c, b in zip(in_cols, buf_vals)}
             order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            vals = {c: v[order] for c, v in vals.items()}
-            if on_late == "buffer":
-                buf_i = np.concatenate([buf_i, ids])
-                buf_v = {c: np.concatenate([buf_v[c], vals[c]]) for c in in_cols}
-                thresh = int(buf_i.max()) - lateness
-                order = np.argsort(buf_i, kind="stable")
-                buf_i = buf_i[order]
-                buf_v = {c: v[order] for c, v in buf_v.items()}
-                ripe = buf_i <= thresh
-                ids = buf_i[ripe]
-                vals = {c: v[ripe] for c, v in buf_v.items()}
-                buf_i = buf_i[~ripe]
-                buf_v = {c: v[~ripe] for c, v in buf_v.items()}
-            if on_late in ("drop", "buffer"):
-                keep = ids > last_id
-                ids, vals = ids[keep], {c: v[keep] for c, v in vals.items()}
-                if len(ids):
-                    # drop within-span duplicates (first occurrence wins)
-                    uniq = np.concatenate([[True], ids[1:] != ids[:-1]])
-                    ids = ids[uniq]
-                    vals = {c: v[uniq] for c, v in vals.items()}
-                    last_id = int(ids[-1])
+            ids, vals = ids[order], {c: v[order] for c, v in vals.items()}
+            thresh = int(ids[-1]) - lateness if len(ids) else -1
+            ripe = ids <= thresh
+            buf_ids = ids[~ripe].tolist()
+            buf_vals = [vals[c][~ripe].tolist() for c in in_cols]
+            ids, vals = ids[ripe], {c: v[ripe] for c, v in vals.items()}
+        if on_late in ("drop", "buffer"):
+            ids, vals = _drop_seen(ids, vals, last_id)
             if len(ids):
-                fired += _fold(ids, vals, open_w)
+                last_id = int(ids[-1])
+        fired = _fold(ids, vals, open_w) if len(ids) else []
         items = sorted(open_w.items())
         state.update(
             (
                 [w for w, _ in items],
                 [list(map(float, p)) for _, p in items],
                 last_id,
-                buf_i.tolist(),
-                [buf_v[c].tolist() for c in in_cols],
+                list(buf_ids),
+                [list(b) for b in buf_vals],
             )
         )
         if fired:
@@ -811,7 +824,8 @@ def stream_cb_windows(
             )
 
     return (
-        df.groupBy(key)
+        df.select(*dict.fromkeys([key, id_col, *in_cols]))
+        .groupBy(key)
         .applyInPandasWithState(
             proc, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
         )
@@ -878,8 +892,6 @@ def stream_match_events(
     or it didn't" construction as fixed-k), whereas batch emits its
     partition-end run.
     """
-    import numpy as np
-
     k = len(steps)
     if k < 2:
         raise ValueError("a sequence pattern needs at least 2 steps")
@@ -1023,8 +1035,6 @@ def _stream_match_skip(
     exceeds ``within`` is discarded outright (earliest completion is
     minimal, so no later completion can satisfy the bound), and
     pending starts expire once the last seen ts outruns their span."""
-    import numpy as np
-
     state_schema = "sid array<long>, tsf array<long>, stp array<int>, last_id long"
 
     def proc(
@@ -1142,8 +1152,6 @@ def _stream_match_kleene(
     them (¬p or id gap — gap closure is a completed match, as in
     batch); a run still open at stream end is never emitted (the
     documented stream-end caveat)."""
-    import numpy as np
-
     has_ts = ts_col is not None
     state_schema = (
         "sid array<long>, tsf array<long>, stp array<int>, "
@@ -1418,13 +1426,12 @@ def _flush_cb_buffered(st: DataFrame, key: str, spec: WinSpec, aggs: dict) -> Da
     into its open windows (shared kernel + the processor's exact
     last_id/dedup rule), then finalize everything left open. One state
     row per key → mapInPandas, no exchange."""
-    import numpy as np
-
     win, slide = spec.win, spec.slide
     in_cols = sorted({c for _, c in aggs.values() if c is not None})
     out_cols = ", ".join(f"{n} {_CB_OPS[op][4]}" for n, (op, _c) in aggs.items())
     out_schema = f"{key} string, gwid long, {out_cols}, win_end long"
-    fold = _make_cb_fold(win, slide, aggs, in_cols)
+    fold = _make_cb_fold(win, slide, aggs)
+    ops = _cb_ops(aggs)
     names = [key, "gwid", *aggs.keys(), "win_end"]
 
     gs = st.select(
@@ -1441,29 +1448,14 @@ def _flush_cb_buffered(st: DataFrame, key: str, spec: WinSpec, aggs: dict) -> Da
             recs = []
             for row in pdf.itertuples(index=False):
                 open_w = {int(w): list(p) for w, p in zip(row.wids, row.parts)}
-                fired = []
                 bi = np.asarray(row.buf_ids, dtype=np.int64)
-                if len(bi):
-                    bv = {c: np.asarray(v, dtype=np.float64)
-                          for c, v in zip(in_cols, row.buf_vals)}
-                    order = np.argsort(bi, kind="stable")
-                    bi = bi[order]
-                    bv = {c: v[order] for c, v in bv.items()}
-                    keep = bi > row.last_id
-                    bi = bi[keep]
-                    bv = {c: v[keep] for c, v in bv.items()}
-                    if len(bi):
-                        uniq = np.concatenate([[True], bi[1:] != bi[:-1]])
-                        bi = bi[uniq]
-                        bv = {c: v[uniq] for c, v in bv.items()}
-                        fired += fold(bi, bv, open_w)
+                order = np.argsort(bi, kind="stable")
+                bv = {c: np.asarray(v, dtype=np.float64)[order]
+                      for c, v in zip(in_cols, row.buf_vals)}
+                bi, bv = _drop_seen(bi[order], bv, row.last_id)
+                fired = fold(bi, bv, open_w) if len(bi) else []
                 for w, part in sorted(open_w.items()):
-                    outs, pos = [], 0
-                    for op, _c in aggs.values():
-                        ns = _CB_OPS[op][0]
-                        outs.append(_CB_OPS[op][3](part[pos:pos + ns]))
-                        pos += ns
-                    fired.append((w, *outs, w * slide + win - 1))
+                    fired.append((w, *_cb_finalize(ops, part), w * slide + win - 1))
                 recs += [(getattr(row, key), *r) for r in sorted(fired)]
             if recs:
                 yield pd.DataFrame(recs, columns=names)
@@ -1689,38 +1681,31 @@ def stream_accumulate(
     (sum, count) after EVERY input tuple (reference
     includes/accumulator.hpp:157-192, emit at :181) via a keyed
     stateful processor. Requires per-key-ordered arrival (same contract
-    as stream_cb_windows)."""
+    as stream_cb_windows); within a micro-batch each key's rows are
+    sorted by id once, across all of its Arrow chunks."""
     out_schema = f"{key} string, {id_col} long, running_sum double, running_cnt long"
     state_schema = "s double, c long"
 
     def proc(
         k: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
+        ids, vals = _key_rows(pdfs, id_col, [value_col])
+        if not len(ids):
+            return
         s, c = state.get if state.exists else (0.0, 0)
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            vals = pdf[value_col].to_numpy(dtype=np.float64)
-            order = np.argsort(ids, kind="stable")
-            ids, vals = ids[order], vals[order]
-            run_s = s + np.cumsum(vals)
-            run_c = c + np.arange(1, len(ids) + 1, dtype=np.int64)
-            s, c = float(run_s[-1]), int(run_c[-1])
-            yield pd.DataFrame(
-                {
-                    key: k[0],
-                    id_col: ids,
-                    "running_sum": run_s,
-                    "running_cnt": run_c,
-                }
-            )
-        state.update((s, c))
+        run_s = s + np.cumsum(vals[value_col])
+        run_c = c + np.arange(1, len(ids) + 1, dtype=np.int64)
+        state.update((float(run_s[-1]), int(run_c[-1])))
+        yield pd.DataFrame(
+            {key: k[0], id_col: ids, "running_sum": run_s, "running_cnt": run_c}
+        )
 
-    return df.groupBy(key).applyInPandasWithState(
-        proc, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return (
+        df.select(*dict.fromkeys([key, id_col, value_col]))
+        .groupBy(key)
+        .applyInPandasWithState(
+            proc, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        )
     )
 
 
@@ -1915,8 +1900,6 @@ def stream_cb_windows_tws(
             "(missing in this environment) — use stream_cb_windows"
         )
 
-    import numpy as np
-
     if aggs is None:
         if value_col is None:
             raise ValueError("value_col or aggs required")
@@ -1930,8 +1913,8 @@ def stream_cb_windows_tws(
         f"{n} {_CB_OPS[op][4]}" for n, (op, _c) in aggs.items()
     )
     out_schema = f"{key} string, gwid long, {out_cols}, win_end long"
-    fold = _make_cb_fold(win, slide, aggs, in_cols)
-
+    fold = _make_cb_fold(win, slide, aggs)
+    ops = _cb_ops(aggs)
     cols = [key, "gwid", *aggs.keys(), "win_end"]
 
     class CBWindows(StatefulProcessor):
@@ -1951,18 +1934,10 @@ def stream_cb_windows_tws(
                 if got is not None
                 else {}
             )
-            fired = []
-            # numpy fold per Arrow batch (no per-row Python): shared
-            # kernel with stream_cb_windows (_make_cb_fold)
-            for pdf in rows:
-                if not len(pdf):
-                    continue
-                ids = pdf[id_col].to_numpy(dtype=np.int64)
-                vals = {c: pdf[c].to_numpy(dtype=np.float64) for c in in_cols}
-                order = np.argsort(ids, kind="stable")
-                fired += fold(
-                    ids[order], {c: v[order] for c, v in vals.items()}, open_w
-                )
+            # one numpy fold per key and batch: shared kernel with
+            # stream_cb_windows (_make_cb_fold)
+            ids, vals = _key_rows(rows, id_col, in_cols)
+            fired = fold(ids, vals, open_w) if len(ids) else []
             items = sorted(open_w.items())
             self._state.update(
                 (
@@ -1993,14 +1968,10 @@ def stream_cb_windows_tws(
             got = self._state.get()
             if got is None:
                 return
-            flushed = []
-            for w, part in sorted(zip(got[0], got[1])):
-                outs, pos = [], 0
-                for op, _c in aggs.values():
-                    ns = _CB_OPS[op][0]
-                    outs.append(_CB_OPS[op][3](list(part[pos:pos + ns])))
-                    pos += ns
-                flushed.append((int(w), *outs, int(w) * slide + win - 1))
+            flushed = [
+                (int(w), *_cb_finalize(ops, part), int(w) * slide + win - 1)
+                for w, part in sorted(zip(got[0], got[1]))
+            ]
             self._state.clear()
             if flushed:
                 yield pd.DataFrame(
@@ -2010,9 +1981,13 @@ def stream_cb_windows_tws(
         def close(self) -> None:
             pass
 
-    return df.groupBy(key).transformWithStateInPandas(
-        CBWindows(), out_schema, "append",
-        "processingTime" if idle_flush_ms is not None else "none",
+    return (
+        df.select(*dict.fromkeys([key, id_col, *in_cols]))
+        .groupBy(key)
+        .transformWithStateInPandas(
+            CBWindows(), out_schema, "append",
+            "processingTime" if idle_flush_ms is not None else "none",
+        )
     )
 
 
