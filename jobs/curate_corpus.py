@@ -79,22 +79,26 @@ def main() -> None:
     docs = spark.read.parquet(args.input)
     n_in = docs.count() if args.report else None
 
-    # 1. quality + repetition signals (both map-side, zero exchanges)
-    feat = text.repetition_features(
-        text.quality_features(docs, args.text_col), args.text_col
-    )
-    kept_q = feat.filter(
-        (F.col("n_tokens") >= args.min_tokens)
-        & (F.col("distinct_token_ratio") >= args.min_distinct_ratio)
-        & (F.col("top_token_frac") <= args.max_top_token)
-    )
-    n_quality = kept_q.count() if args.report else None
-
-    # 2. near-dup dedup over the quality survivors (LSH-bounded verify)
     with dedup.persisted_scope():
+        # 1. quality + repetition signals (both map-side, zero exchanges).
+        # kept_q feeds the quality count, the dedup shingles, the keep
+        # list's id side and the semi-join below: persisted, the Arrow
+        # feature kernel runs once per doc instead of once per branch
+        feat = text.repetition_features(
+            text.quality_features(docs, args.text_col), args.text_col
+        )
+        kept_q = dedup.persist_scoped(feat.filter(
+            (F.col("n_tokens") >= args.min_tokens)
+            & (F.col("distinct_token_ratio") >= args.min_distinct_ratio)
+            & (F.col("top_token_frac") <= args.max_top_token)
+        ))
+        n_quality = kept_q.count() if args.report else None
+
+        # 2. near-dup dedup over the quality survivors (LSH-bounded
+        # verify; degenerate LSH buckets capped at 256 members)
         keep = dedup.dedup_keep_list(
             kept_q, args.id_col, args.text_col,
-            threshold=args.jaccard, max_df=args.max_df,
+            threshold=args.jaccard, max_df=args.max_df, max_bucket=256,
         )
         deduped = kept_q.join(
             keep.filter(F.col("keep")).select(args.id_col),

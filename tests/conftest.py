@@ -46,3 +46,18 @@ def assert_frames_equal(got: pd.DataFrame, want: pd.DataFrame, sort_by: list[str
     g = g[sorted(g.columns)]
     w = w[sorted(w.columns)]
     pd.testing.assert_frame_equal(g, w, check_dtype=False, check_exact=False, rtol=1e-9)
+
+
+def counted(df):
+    """``df`` behind a pass-through ``mapInPandas`` that adds each row
+    it passes to a Spark accumulator: returns (frame, accumulator). After
+    an action the accumulator holds how many rows of ``df`` it evaluated:
+    n for one pass over n rows, k·n when the plan re-runs ``df`` k times."""
+    acc = df.sparkSession.sparkContext.accumulator(0)
+
+    def _count(batches):
+        for pdf in batches:
+            acc.add(len(pdf))
+            yield pdf
+
+    return df.mapInPandas(_count, df.schema), acc

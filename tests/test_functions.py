@@ -425,11 +425,9 @@ def test_persisted_scope_releases_only_inner_entries(spark):
     without bound in a long-lived session)."""
     import pandas as pd
 
-    from pyspark import StorageLevel
-
     dedup.unpersist_all()
     outer = spark.createDataFrame(pd.DataFrame({"x": [1, 2]}))
-    dedup._track_persist(outer, StorageLevel.MEMORY_AND_DISK)
+    dedup.persist_scoped(outer)
     rows = [(i, f"document number {i} with shared words") for i in range(6)]
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
     with dedup.persisted_scope():
@@ -445,6 +443,37 @@ def test_persisted_scope_releases_only_inner_entries(spark):
     assert dedup.unpersist_all() == 1
 
 
+# DuckDB oracle for repetition_features' token/bigram signals over a
+# ``documents`` table (Spark and DuckDB ``trim`` both strip only ' ')
+REPETITION_SQL = """
+    WITH toks AS (
+      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
+      FROM documents),
+    unic AS (
+      SELECT doc_id, round(max(n)::double / sum(n), 6) AS top_token_frac
+      FROM (SELECT doc_id, tok, count(*) AS n
+            FROM (SELECT doc_id, unnest(t) AS tok FROM toks)
+            GROUP BY 1, 2)
+      GROUP BY doc_id),
+    bg AS (
+      SELECT doc_id,
+             list_transform(generate_series(1, len(t) - 1),
+                            i -> t[i] || ' ' || t[i + 1]) AS b
+      FROM toks),
+    bgc AS (
+      SELECT doc_id, round(max(n)::double / sum(n), 6) AS top_bigram_frac
+      FROM (SELECT doc_id, g, count(*) AS n
+            FROM (SELECT doc_id, unnest(b) AS g FROM bg)
+            GROUP BY 1, 2)
+      GROUP BY doc_id)
+    SELECT toks.doc_id, unic.top_token_frac, bgc.top_bigram_frac,
+           round(len(list_distinct(t))::double / len(t), 6)
+             AS distinct_token_ratio
+    FROM toks JOIN unic USING (doc_id)
+    LEFT JOIN bgc USING (doc_id)
+"""
+
+
 def test_repetition_features_vs_duckdb(docs, ddb):
     got = (
         text.repetition_features(docs)
@@ -453,36 +482,40 @@ def test_repetition_features_vs_duckdb(docs, ddb):
         )
         .toPandas()
     )
-    want = ddb.execute(
-        """
-        WITH toks AS (
-          SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-          FROM documents),
-        unic AS (
-          SELECT doc_id, round(max(n)::double / sum(n), 6) AS top_token_frac
-          FROM (SELECT doc_id, tok, count(*) AS n
-                FROM (SELECT doc_id, unnest(t) AS tok FROM toks)
-                GROUP BY 1, 2)
-          GROUP BY doc_id),
-        bg AS (
-          SELECT doc_id,
-                 list_transform(generate_series(1, len(t) - 1),
-                                i -> t[i] || ' ' || t[i + 1]) AS b
-          FROM toks),
-        bgc AS (
-          SELECT doc_id, round(max(n)::double / sum(n), 6) AS top_bigram_frac
-          FROM (SELECT doc_id, g, count(*) AS n
-                FROM (SELECT doc_id, unnest(b) AS g FROM bg)
-                GROUP BY 1, 2)
-          GROUP BY doc_id)
-        SELECT toks.doc_id, unic.top_token_frac, bgc.top_bigram_frac,
-               round(len(list_distinct(t))::double / len(t), 6)
-                 AS distinct_token_ratio
-        FROM toks JOIN unic USING (doc_id)
-        LEFT JOIN bgc USING (doc_id)
-        """
-    ).df()
+    want = ddb.execute(REPETITION_SQL).df()
     assert_frames_equal(got, want, ["doc_id"])
+
+
+def test_repetition_features_tab_newline_vs_duckdb(spark):
+    """Leading tabs and trailing newlines survive Spark's and DuckDB's
+    ``trim`` (both strip only ' '), so they split off empty tokens that
+    the kernel must count too."""
+    texts = [
+        "\tspark stream window",
+        "spark stream window\n",
+        "\tspark spark\n",
+        " a b  a b\n",
+        "\t\tx y x\n\n",
+        "\n",
+        "line one\nline two",
+        "plain text here",
+    ]
+    pdf = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
+    got = (
+        text.repetition_features(spark.createDataFrame(pdf))
+        .select(
+            "doc_id", "top_token_frac", "top_bigram_frac", "distinct_token_ratio"
+        )
+        .toPandas()
+    )
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    want = con.execute(REPETITION_SQL).df()
+    con.close()
+    assert_frames_equal(got, want, ["doc_id"])
+    # ['', 'spark', 'stream', 'window']: a Java String.trim would drop
+    # the tab and its empty token, giving 1/3
+    assert got.set_index("doc_id").loc[0, "top_token_frac"] == 0.25
 
 
 def test_repetition_features_hand_fixture(spark):

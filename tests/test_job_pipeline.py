@@ -167,7 +167,8 @@ def test_curate_corpus_job_end_to_end(tmp_path):
     )
     with dedup.persisted_scope():
         keep = dedup.dedup_keep_list(kept_q, "doc_id", "text",
-                                     threshold=0.8, max_df=1000)
+                                     threshold=0.8, max_df=1000,
+                                     max_bucket=256)
         deduped = kept_q.join(
             keep.filter(F.col("keep")).select("doc_id"), "doc_id", "left_semi"
         )
@@ -192,3 +193,49 @@ def test_curate_corpus_job_end_to_end(tmp_path):
     from tests.conftest import assert_frames_equal
 
     assert_frames_equal(got, want, ["doc_id"])
+
+
+def test_curate_main_evaluates_feature_input_once(spark, tmp_path, monkeypatch):
+    """One in-process curate_corpus.main() feeds each document through
+    the repetition-feature kernel once: the quality survivors are read
+    by the quality count, the dedup shingles, the keep list and the
+    semi-join, and the bucketed pack reads its input twice, yet none of
+    them re-runs the kernel. Its input is counted by a pass-through
+    accumulator stage."""
+    import json
+    import sys
+
+    from tests.conftest import counted
+    from tests.test_functions import SF
+    from windflow_spark.functions import text
+
+    (tmp_path / "in").mkdir()
+    shutil.copy(f"{SF}/documents.parquet", tmp_path / "in" / "documents.parquet")
+    accs = []
+    kernel = text.repetition_features
+
+    def counted_kernel(df, text_col="text"):
+        df, acc = counted(df)
+        accs.append(acc)
+        return kernel(df, text_col)
+
+    monkeypatch.setattr(text, "repetition_features", counted_kernel)
+    monkeypatch.syspath_prepend(str(REPO / "jobs"))
+    import curate_corpus
+
+    report = tmp_path / "report.json"
+    monkeypatch.setattr(sys, "argv", [
+        "curate_corpus.py", "--input", str(tmp_path / "in"),
+        "--output", str(tmp_path / "curated"), "--report", str(report),
+    ])
+    # main()'s get_spark() re-applies its default shuffle partitions to
+    # the shared session
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        curate_corpus.main()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+    summary = json.loads(report.read_text())
+    assert 0 < summary["after_dedup_and_split"] <= summary["after_quality"]
+    assert len(accs) == 1
+    assert accs[0].value == summary["rows_in"] == 500, accs[0].value

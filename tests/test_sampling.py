@@ -389,6 +389,23 @@ def test_pack_sequences_bucketed_oversized_and_boundary(docs):
         assert_frames_equal(buck, plain, ["doc_id"])
 
 
+def test_pack_sequences_bucketed_evaluates_input_once(docs):
+    """Both passes of the bucketed layout (the totals aggregate and the
+    broadcast join) read the input: it is materialised once, so an
+    upstream runs once per row, not once per pass."""
+    from tests.conftest import counted
+
+    n = docs.count()
+    for dense in (False, True):
+        src, acc = counted(_bucketed(docs))
+        out = sampling.pack_sequences(
+            src, "doc_id", "tok", 200, key_col="source", dense=dense,
+            bucket_col="_bk",
+        ).collect()
+        assert len(out) == n
+        assert acc.value == n, (dense, acc.value, n)
+
+
 def test_pack_sequences_bucketed_plan(docs):
     """Plan contract for the 100 TB posture: the big-side window
     partitions by (key, bucket) — sort parallelism = bucket count —

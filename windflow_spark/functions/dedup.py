@@ -23,20 +23,25 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from windflow_spark.functions.text import fingerprint, ngram_array, tokens
 
 # Persisted intermediates created by the persist=True defaults below
-# (signatures in lsh_candidate_pairs, shingles in dedup_keep_list,
-# banded table in simhash_near_pairs). These plans return lazily, so
-# the caller — not this module — owns the terminal action; in a
-# long-lived session call ``unpersist_all()`` after materializing
-# results to release the cache instead of waiting for LRU eviction.
+# (banded table in lsh_candidate_pairs, shingles in dedup_keep_list,
+# banded table in simhash_near_pairs) or by callers through
+# ``persist_scoped``. These plans return lazily, so the caller — not this
+# module — owns the terminal action; in a long-lived session call
+# ``unpersist_all()`` after materializing results to release the cache
+# instead of waiting for LRU eviction.
 _PERSISTED: list[DataFrame] = []
 
 
-def _track_persist(df: DataFrame, level) -> DataFrame:
-    out = df.persist(level)
+def persist_scoped(df: DataFrame) -> DataFrame:
+    """Persist ``df`` MEMORY_AND_DISK and register it, so the enclosing
+    ``persisted_scope`` (or ``unpersist_all``) releases it. For a
+    caller's own intermediate that several branches of one plan read."""
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
     _PERSISTED.append(out)
     return out
 
@@ -168,7 +173,7 @@ def lsh_candidate_pairs(
     bands: int = 8,
     rows_per_band: int = 4,
     persist: bool = True,
-    max_bucket: int | None = 256,
+    max_bucket: int | None = None,
 ) -> DataFrame:
     """Band the wide signature (band b = columns m{b*r}..m{b*r+r-1};
     band key = md5 of their comma-joined values) and emit candidate
@@ -183,7 +188,8 @@ def lsh_candidate_pairs(
     default to compute it once; persisting after the cap also runs the
     cap's rank window once instead of once per join arm.
 
-    ``max_bucket`` caps DEGENERATE buckets (guide §2.5 — a single
+    ``max_bucket`` (opt-in; default ``None`` = exact, every bucket
+    member pairs) caps DEGENERATE buckets (guide §2.5 — a single
     enormous key that AQE cannot split): a bucket with B members
     yields B(B-1)/2 bucket-local pairs, and boilerplate-heavy corpora
     produce buckets of 10⁵+ identical band keys at 100 TB, turning the
@@ -196,7 +202,8 @@ def lsh_candidate_pairs(
     are near-identical boilerplate, which the capped members still
     represent (any kept pair transitively links through
     `connected_components`/the keep-list greedy pass); other bands
-    still vote independently. ``None`` disables the cap."""
+    still vote independently. Pass it at scale-sensitive call sites
+    (jobs/curate_corpus.py passes 256)."""
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
@@ -225,9 +232,7 @@ def lsh_candidate_pairs(
             .drop("_bk_rank")
         )
     if persist:
-        from pyspark.storagelevel import StorageLevel
-
-        banded = _track_persist(banded, StorageLevel.MEMORY_AND_DISK)
+        banded = persist_scoped(banded)
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(
@@ -347,10 +352,12 @@ def connected_components(
     the exact fixpoint (changed == 0 — an honest count, not a
     checksum). Each round is two shuffles (a neighbor-min aggregate +
     the jump join); lineage is truncated per round with
-    localCheckpoint so the plan doesn't grow exponentially. Skew note:
-    the jump join keys by current label, which concentrates on big
-    components' roots — AQE skew-split handles it (the join is 2-col
-    lhs × 2-col rhs, salting-free by design).
+    localCheckpoint so the plan doesn't grow exponentially (a superseded
+    round's checkpoint is freed by Spark's ContextCleaner once nothing
+    references it — ``unpersist`` on a localCheckpoint is a no-op).
+    Skew note: the jump join keys by current label, which concentrates
+    on big components' roots — AQE skew-split handles it (the join is
+    2-col lhs × 2-col rhs, salting-free by design).
     """
     sym = edges.select(
         F.col(id_a).alias("_u"), F.col(id_b).alias("_v")
@@ -401,15 +408,6 @@ def connected_components(
             .limit(1)
             .count()
         )
-        # the superseded round's checkpointed RDD is dead once `jump`
-        # replaces it — unpersist so a slow-converging graph doesn't
-        # accumulate O(rounds) checkpoints in executor storage
-        # (ADVICE r7 #3); the initial `labels` has no checkpoint to
-        # free only on round 0's entry, so this is safe unconditionally
-        try:
-            labels.unpersist()
-        except Exception:
-            pass
         labels = jump
         if changed == 0:
             break
@@ -417,12 +415,6 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} rounds"
         )
-    try:
-        # the symmetrized edge checkpoint is dead once the loop exits:
-        # the returned frame reads only the final labels checkpoint
-        sym.unpersist()
-    except Exception:
-        pass
     return labels.select(
         F.col("_id").alias("id"), F.col("_c").alias("component")
     )
@@ -440,6 +432,7 @@ def dedup_keep_list(
     max_df: int | None = None,
     persist: bool = True,
     transitive: bool = False,
+    max_bucket: int | None = None,
 ) -> DataFrame:
     """End-to-end near-dup dedup pipeline: the composition a real
     training-data pipeline runs — shingle → MinHash signatures → LSH
@@ -469,14 +462,18 @@ def dedup_keep_list(
     NOT unify them — without persistence the corpus is tokenized and
     scanned per branch. Default persists shingles MEMORY_AND_DISK
     (≈ shingle-count × avg-shingle bytes; at extreme scale prefer
-    pre-materializing the shingle table to parquet and persist=False)."""
+    pre-materializing the shingle table to parquet and persist=False).
+
+    ``max_bucket`` is forwarded to ``lsh_candidate_pairs`` (opt-in cap
+    on degenerate LSH buckets; default exact)."""
     sh = word_shingles(docs, id_col, text_col, n=n)
     if persist:
-        from pyspark.storagelevel import StorageLevel
-
-        sh = _track_persist(sh, StorageLevel.MEMORY_AND_DISK)
+        sh = persist_scoped(sh)
     sigs = minhash_signatures(sh, id_col, k=minhash_k)
-    cands = lsh_candidate_pairs(sigs, id_col, bands=bands, rows_per_band=rows_per_band)
+    cands = lsh_candidate_pairs(
+        sigs, id_col, bands=bands, rows_per_band=rows_per_band,
+        max_bucket=max_bucket,
+    )
     pairs = ngram_jaccard_pairs(
         sh, id_col, threshold=threshold, candidates=cands, max_df=max_df
     )
@@ -569,9 +566,7 @@ def simhash_near_pairs(
         ).alias("bb"),
     ).select(id_col, "simhash", "bb.band", "bb.bkey")
     if persist:
-        from pyspark.storagelevel import StorageLevel
-
-        banded = _track_persist(banded, StorageLevel.MEMORY_AND_DISK)
+        banded = persist_scoped(banded)
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(

@@ -248,7 +248,11 @@ def pack_sequences(
     table; pass 2 broadcasts the offsets back and runs the cumsum
     window per (key, bucket) — the sort parallelism becomes bucket
     cardinality, never one task per split. Bin contents are IDENTICAL
-    to the single-window layout (parity-tested). ``dense=True``
+    to the single-window layout (parity-tested). Both passes read
+    ``df``, and Spark re-runs a shared lazy input per reader, so the
+    bucketed branch first materialises ``df`` with a lazy local
+    checkpoint: its upstream (a dedup semi-join, a split, a token
+    count...) runs ONCE, inside the caller's action. ``dense=True``
     decomposes the same way: per-bucket distinct-bin counts, minus a
     boundary bin shared with the previous bucket, prefix-summed into
     per-bucket dense offsets added to the per-bucket dense_rank.
@@ -277,6 +281,8 @@ def pack_sequences(
         return out
 
     # ---- bucketed two-pass layout --------------------------------
+    # pass 1 (totals) and pass 2 (the broadcast join) both read df
+    df = df.localCheckpoint(eager=False)
     keys = ([key_col] if key_col else []) + [bucket_col]
     kparts = [F.col(key_col)] if key_col else [F.lit(0)]
     owin = Window.partitionBy(*kparts).orderBy(F.col(bucket_col).asc())

@@ -184,8 +184,10 @@ def repetition_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     can't disagree with BigDecimal HALF_UP here because every fraction
     is p/q with q ≪ 2^40, so its distance from a .5 tie is ≥ 1/(2q),
     orders above double error). Tokenization mirrors the JVM ops
-    exactly: Java ``trim`` strips chars ≤ U+0020 and Java regex ``\\s``
-    is ASCII-only — NOT Python ``str.strip``/Unicode ``\\s``.
+    exactly: Spark ``trim`` (like DuckDB's) strips only U+0020, so a
+    leading tab or trailing newline survives it and splits off an
+    empty token; Java regex ``\\s`` is ASCII-only — NOT Python
+    ``str.strip``/Unicode ``\\s``.
 
     Plan shape is unchanged: zero exchanges, opaque-but-narrow —
     callers should project before calling when the table is wide
@@ -195,7 +197,6 @@ def repetition_features(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     import pandas as pd
 
-    _ws = "".join(chr(i) for i in range(0x21))  # Java String.trim charset
     _split = re.compile(r"[ \t\n\x0b\f\r]+").split  # Java ASCII \s+
 
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -225,7 +226,7 @@ def repetition_features(df: DataFrame, text_col: str = "text") -> DataFrame:
                 if not isinstance(t, str):  # null doc → null features
                     rows.append((None,) * len(feat_cols))
                     continue
-                toks = _split(t.strip(_ws))
+                toks = _split(t.strip(" "))  # Spark trim: U+0020 only
                 n = len(toks)
                 counts = Counter(toks)
                 ttf = r6(max(counts.values()) / n)
