@@ -1,18 +1,8 @@
-"""One-command verification of the CLUSTER-GATED paths that cannot
-be proven in this container (VERDICT r1 item 10):
-
-1. transformWithStateInPandas CB windows (needs google.protobuf — the
-   TWS state-server protocol runtime; absent locally, present on
-   standard cluster images): parity against the classic
-   applyInPandasWithState implementation on synthetic data.
-2. TWS idle-key timer flush (VERDICT r5 #6): a LIVE (processing-time
-   trigger, never drained) query with ``idle_flush_ms`` must emit each
-   key's partial windows once the key goes idle — fired ∪ timer-flushed
-   == the batch win_seq result including partials (the continuous-mode
-   eosnotify, where the statestore-read flush arms can't apply).
-3. Iceberg source/sink (needs the iceberg-spark-runtime jar on the
-   classpath + a catalog conf): batch write → batch read → streaming
-   read → exactly-once streaming sink round-trip.
+"""One-command verification of the CLUSTER-GATED Iceberg source/sink,
+which cannot be proven in this container (VERDICT r1 item 10): it needs
+the iceberg-spark-runtime jar on the classpath + a catalog conf. The
+check runs batch write → batch read → streaming read → exactly-once
+streaming sink round-trip.
 
 Run on a cluster image:
 
@@ -23,27 +13,23 @@ Run on a cluster image:
     --conf spark.sql.catalog.wf.warehouse=/tmp/wf_warehouse \
     tools/cluster_verify.py
 
-or locally (prints SKIP lines for the gated paths):
+or locally (prints a SKIP line for the gated path):
 
   python tools/cluster_verify.py
 
 Expected output on a fully-equipped image (exact lines, order fixed):
 
-  PASS tws_cb_parity (N rows)
-  PASS tws_timer_idle_flush (10 rows == batch incl. partials)
   PASS iceberg_batch_roundtrip (40 rows)
   PASS iceberg_stream_sink_exactly_once (40 rows, resume added 0)
-  cluster_verify: 3 passed, 0 skipped
+  cluster_verify: 2 passed, 0 skipped
 
 Locally, expected:
 
-  SKIP tws_cb_parity: google.protobuf missing
-  SKIP tws_timer_idle_flush: google.protobuf missing
   SKIP iceberg_*: org.apache.iceberg.spark.SparkCatalog not on classpath
-  cluster_verify: 0 passed, 3 skipped
+  cluster_verify: 0 passed, 1 skipped
 
-Any FAIL line (mismatched parity rows, duplicated sink rows on resume)
-is a real defect in the gated code path, not an environment gap.
+Any FAIL line (duplicated sink rows on resume) is a real defect in the
+gated code path, not an environment gap.
 """
 
 from __future__ import annotations
@@ -54,9 +40,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-import numpy as np  # noqa: E402
 import pandas as pd  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
 
 
 def _mk_input(spark, path: str) -> None:
@@ -69,126 +53,6 @@ def _mk_input(spark, path: str) -> None:
         }
     )
     spark.createDataFrame(pdf).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def verify_tws(spark) -> str:
-    from windflow_spark.operators.windows import WinSpec
-    from windflow_spark.streaming import engine as se
-
-    if not se.tws_available():
-        return "SKIP tws_cb_parity: google.protobuf missing"
-    src_dir = tempfile.mkdtemp(prefix="wfcv_tws_")
-    _mk_input(spark, src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    spec = WinSpec("cb", 8, 4)
-
-    # non-default agg set: exercises the generalized aggs= passthrough
-    # on the TWS path (VERDICT r3 #5) across the FULL registry — incl.
-    # the non-scalar argmax (value, id) fold (VERDICT r4 #6) and a
-    # USER-REGISTERED fold (register_cb_op, r6: both processors ship
-    # the registry snapshot by value in their pickled closures, so a
-    # driver-side registration must reach cluster executors too)
-    if "vrange" not in se._CB_OPS:
-        se.register_cb_op(
-            "vrange", n_slots=2,
-            batch=lambda v, ids, s: [np.minimum.reduceat(v, s),
-                                     np.maximum.reduceat(v, s)],
-            merge=lambda o, n: [min(o[0], n[0]), max(o[1], n[1])],
-            finalize=lambda s: s[1] - s[0], out_type="double",
-            validate_with=[3.0, -1.5, 8.25, 0.0, 4.5],
-        )
-    if "histq_cv" not in se._CB_OPS:
-        se.register_quantile_hist_op("histq_cv", lo=0.0, hi=40.0, bins=20, q=0.5)
-    aggs = {
-        "s": ("sum", "v"), "c": ("count", None),
-        "mn": ("min", "v"), "mx": ("max", "v"), "avg": ("mean", "v"),
-        "am": ("argmax", "v"),
-        "vr": ("var", "v"), "sd": ("std", "v"),  # 3-slot triple (r6)
-        "rg": ("vrange", "v"),  # user fold (register_cb_op, r6)
-        "du": ("hll64", "vh"),  # 64-slot mergeable sketch (r7)
-        "p50": ("histq_cv", "v"),  # histogram-quantile factory (r7)
-    }
-
-    def run(fn, name):
-        src = se.stream_source(spark, src_dir, schema).withColumn(
-            "vh", se.hll_prep(F.col("v").cast("long"))
-        )
-        out = fn(src, "k", "i", None, spec, aggs=aggs)
-        return (
-            se.run_to_memory(out, name, spark, output_mode="append")
-            .toPandas()
-            .sort_values(["k", "gwid"])
-            .reset_index(drop=True)
-        )
-
-    classic = run(se.stream_cb_windows, "cv_classic")
-    tws = run(se.stream_cb_windows_tws, "cv_tws")
-    if len(classic) and classic.equals(tws):
-        return f"PASS tws_cb_parity ({len(classic)} rows, aggs={sorted(aggs)})"
-    return f"FAIL tws_cb_parity: classic={len(classic)} rows, tws={len(tws)} rows"
-
-
-def verify_tws_timer_flush(spark) -> str:
-    """Continuous-mode eosnotify (VERDICT r5 #6): run the TWS CB
-    processor on a LIVE processing-time-trigger query (never drained),
-    feed a finite input, then let every key go idle past
-    ``idle_flush_ms`` — the per-key timers must emit the still-open
-    partial windows, making fired ∪ flushed equal the batch win_seq
-    result INCLUDING partials (same parity target as the
-    statestore-read flush arms, reached without stopping the query)."""
-    import time
-
-    from windflow_spark.operators.windows import WinSpec, win_seq
-    from windflow_spark.streaming import engine as se
-
-    if not se.tws_available():
-        return "SKIP tws_timer_idle_flush: google.protobuf missing"
-    src_dir = tempfile.mkdtemp(prefix="wfcv_twst_")
-    _mk_input(spark, src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    spec = WinSpec("cb", 8, 4)
-    aggs = {"s": ("sum", "v"), "c": ("count", None), "vr": ("var", "v")}
-
-    src = se.stream_source(spark, src_dir, schema)
-    out = se.stream_cb_windows_tws(
-        src, "k", "i", None, spec, aggs=aggs, idle_flush_ms=5_000
-    )
-    name = "cv_tws_timer"
-    q = (
-        out.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(processingTime="1 second").start()
-    )
-    # ids 0..19 per key, win 8 / slide 4: w0..w3 fire on arrival, w4
-    # ([16, 24) — saw 16..19) stays open until the idle timer flushes
-    # it → 5 windows per key, 10 rows total
-    want = win_seq(
-        spark.read.parquet(src_dir), ["k"], "i", spec,
-        aggs={"s": F.sum("v"), "c": F.count(F.lit(1)), "vr": F.var_pop("v")},
-    ).toPandas().sort_values(["k", "gwid"]).reset_index(drop=True)
-    got = None
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        time.sleep(5)
-        got = (
-            spark.sql(f"SELECT * FROM {name}").toPandas()
-            .sort_values(["k", "gwid"]).reset_index(drop=True)
-        )
-        if len(got) >= len(want):
-            break
-    q.stop()
-    if got is None or len(got) != len(want):
-        return (
-            f"FAIL tws_timer_idle_flush: {0 if got is None else len(got)} "
-            f"rows vs batch {len(want)} (partials not flushed?)"
-        )
-    cols = ["k", "gwid", "s", "c", "vr", "win_end"]
-    try:
-        pd.testing.assert_frame_equal(
-            got[cols], want[cols], check_dtype=False, rtol=1e-9
-        )
-    except AssertionError as ex:
-        return f"FAIL tws_timer_idle_flush: value mismatch {str(ex)[:200]}"
-    return f"PASS tws_timer_idle_flush ({len(got)} rows == batch incl. partials)"
 
 
 def verify_iceberg(spark) -> list[str]:
@@ -246,7 +110,7 @@ def main() -> None:
 
     spark = get_spark("cluster-verify", master="local[4]", shuffle_partitions=4,
                       streaming=True)
-    lines = [verify_tws(spark), verify_tws_timer_flush(spark)] + verify_iceberg(spark)
+    lines = verify_iceberg(spark)
     for line in lines:
         print(line)
     n_pass = sum(1 for l in lines if l.startswith("PASS"))

@@ -27,6 +27,7 @@ tests feed per-key-ordered input (SURVEY.md §4.2 gap note).
 from __future__ import annotations
 
 import json
+import math
 from collections.abc import Iterator, Sequence
 
 import numpy as np
@@ -470,9 +471,9 @@ def register_cb_op(
     """Register a USER-DECLARED decomposable fold as a streaming CB op
     — closing the gap to the reference's arbitrary INC lambda
     (win_seq.hpp:63-65): any fold a user can state as (partial slots,
-    batch kernel, merge, finalize) plugs into stream_cb_windows,
-    stream_cb_windows_tws and the EOS flush arms exactly like the
-    built-ins (they all read the same registry).
+    batch kernel, merge, finalize) plugs into stream_cb_windows and
+    the EOS flush arms exactly like the built-ins (they all read the
+    same registry).
 
     - ``n_slots``: float64 partial slots per window.
     - ``batch(v, ids, starts)``: the numpy segment kernel — receives
@@ -620,10 +621,9 @@ def _cb_finalize(ops: list, part) -> list:
 
 
 def _make_cb_fold(win: int, slide: int, aggs: dict):
-    """Build the vectorized CB fold kernel shared by stream_cb_windows
-    (applyInPandasWithState) and stream_cb_windows_tws
-    (transformWithStateInPandas): fold sorted ids into open windows,
-    return fired (gwid, finalized..., win_end) rows. Fully vectorized —
+    """Build the vectorized CB fold kernel of stream_cb_windows: fold
+    sorted ids into open windows, return fired (gwid, finalized...,
+    win_end) rows. Fully vectorized —
     the wid explosion is arange arithmetic, stable-sorted by window id;
     every registry kernel then reduces numpy segments (``batch(v, ids,
     starts)``, see the contract above ``_CB_OPS``) — no pandas.
@@ -1833,162 +1833,9 @@ class MetricsListener:
     def p99_batch_ms(self) -> float | None:
         if not self.rows:
             return None
+        # nearest rank: the ceil(0.99·n)-th smallest duration
         ds = sorted(r["batch_duration_ms"] for r in self.rows)
-        return ds[min(len(ds) - 1, int(0.99 * len(ds)))]
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas needs the protobuf runtime for its
-    state-server protocol; absent in this container (pip install is
-    unavailable). Present on standard cluster images."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stream_cb_windows_tws(
-    df: DataFrame,
-    key: str,
-    id_col: str,
-    value_col: str | None,
-    spec: WinSpec,
-    aggs: dict[str, tuple[str, str | None]] | None = None,
-    idle_flush_ms: int | None = None,
-) -> DataFrame:
-    """Count-based windows on the transformWithStateInPandas API
-    (Spark 4.x successor of applyInPandasWithState): typed per-key
-    ValueState, Arrow-batched input, same Triggerer_CB fire rule and
-    the same ``aggs`` registry contract as stream_cb_windows (the two
-    paths share the ``_make_cb_fold`` kernel and state slot layout, so
-    they stay interchangeable). Kept alongside the classic
-    implementation — parity-tested against it — as the forward path.
-
-    ``idle_flush_ms`` — CONTINUOUS-MODE eosnotify (win_seq.hpp:432-474
-    for a query that never drains, VERDICT r5 #6): when set, the
-    processor runs in processing-time mode and keeps one timer per key
-    at (last input's processing time + idle_flush_ms), re-armed on
-    every batch that brings the key data. If the key then stays idle
-    past the deadline, the timer fires and the still-open PARTIAL
-    windows are finalized, emitted, and cleared — the per-key analogue
-    of the reference's end-of-stream flush for live queries, where the
-    statestore-read flush arms (flush_cb_partials) can't apply because
-    the query never stops. A key that receives data AFTER its flush
-    restarts from empty state (CB ids keep their per-key meaning; the
-    flush marks the logical end of that key's stream, exactly like
-    eosnotify). Uses the same _CB_OPS finalize as the fired path, so
-    flushed rows are indistinguishable from an EOS flush's. Needs the
-    protobuf runtime (cluster images) — covered by
-    tools/cluster_verify.py's tws_timer_idle_flush arm.
-
-    State-format note: since r4 the value state is the generic
-    (wids array<long>, parts array<array<double>>) slot layout — a
-    checkpoint written by the r2-era (wids, sums, cnts) schema does NOT
-    resume against this version (state-schema validation fails);
-    restart the query with a fresh checkpoint. Count slots travel as
-    doubles inside the parts arrays (exact to 2^53 rows per window)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires google.protobuf "
-            "(missing in this environment) — use stream_cb_windows"
-        )
-
-    if aggs is None:
-        if value_col is None:
-            raise ValueError("value_col or aggs required")
-        aggs = {"sum_value": ("sum", value_col), "cnt": ("count", None)}
-    for name, (op, _c) in aggs.items():
-        if op not in _CB_OPS:
-            raise ValueError(f"agg {name!r}: unknown op {op!r} (have {sorted(_CB_OPS)})")
-    win, slide = spec.win, spec.slide
-    in_cols = sorted({c for _, c in aggs.values() if c is not None})
-    out_cols = ", ".join(
-        f"{n} {_CB_OPS[op][4]}" for n, (op, _c) in aggs.items()
-    )
-    out_schema = f"{key} string, gwid long, {out_cols}, win_end long"
-    fold = _make_cb_fold(win, slide, aggs)
-    ops = _cb_ops(aggs)
-    cols = [key, "gwid", *aggs.keys(), "win_end"]
-
-    class CBWindows(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            # generic slot layout (parts per open window) — same state
-            # shape as stream_cb_windows, so the two paths stay
-            # interchangeable as aggs generalize
-            self._handle = handle
-            self._state = handle.getValueState(
-                "open_windows", "wids array<long>, parts array<array<double>>"
-            )
-
-        def handleInputRows(self, k, rows, timerValues):
-            got = self._state.get()
-            open_w = (
-                {int(w): list(p) for w, p in zip(got[0], got[1])}
-                if got is not None
-                else {}
-            )
-            # one numpy fold per key and batch: shared kernel with
-            # stream_cb_windows (_make_cb_fold)
-            ids, vals = _key_rows(rows, id_col, in_cols)
-            fired = fold(ids, vals, open_w) if len(ids) else []
-            items = sorted(open_w.items())
-            self._state.update(
-                (
-                    [w for w, _ in items],
-                    [list(map(float, p)) for _, p in items],
-                )
-            )
-            if idle_flush_ms is not None:
-                # one idle deadline per key: re-arm on every batch that
-                # brings this key data (delete-then-register keeps a
-                # single outstanding timer)
-                for ts in list(self._handle.listTimers()):
-                    self._handle.deleteTimer(ts)
-                self._handle.registerTimer(
-                    timerValues.getCurrentProcessingTimeInMs() + idle_flush_ms
-                )
-            if fired:
-                yield pd.DataFrame(
-                    [(k[0], *row) for row in sorted(fired)],
-                    columns=cols,
-                )
-
-        def handleExpiredTimer(self, k, timerValues, expiredTimerInfo):
-            # idle-key eosnotify: finalize every still-open window with
-            # the registry finalizers (identical to flush_cb_partials'
-            # projection), emit, and clear — this key's stream has
-            # logically ended
-            got = self._state.get()
-            if got is None:
-                return
-            flushed = [
-                (int(w), *_cb_finalize(ops, part), int(w) * slide + win - 1)
-                for w, part in sorted(zip(got[0], got[1]))
-            ]
-            self._state.clear()
-            if flushed:
-                yield pd.DataFrame(
-                    [(k[0], *row) for row in flushed], columns=cols
-                )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        df.select(*dict.fromkeys([key, id_col, *in_cols]))
-        .groupBy(key)
-        .transformWithStateInPandas(
-            CBWindows(), out_schema, "append",
-            "processingTime" if idle_flush_ms is not None else "none",
-        )
-    )
+        return ds[math.ceil(0.99 * len(ds)) - 1]
 
 
 def run_available_now_ordered(
