@@ -59,16 +59,47 @@ def _utc(spark: SparkSession) -> SparkSession:
     return spark
 
 
+#: Declared schemas of the fixed-name input tables. A declared schema
+#: spares every plan build Spark's schema-inference job (about 100 ms
+#: per read); tests/test_plans.py pins each one against the parquet
+#: footers of every scale factor, so a drift fails loudly instead of
+#: reading nulls.
+TABLE_SCHEMAS = {
+    "events": "event_id long, ts timestamp_ntz, user_id long, "
+              "event_type string, value double, props string",
+    "documents": "doc_id long, text string, lang string, source string, "
+                 "n_chars long",
+    "embeddings": "vec_id long, embedding array<float>, label int",
+    "orders": "o_orderkey long, o_custkey long, o_orderstatus string, "
+              "o_totalprice double, o_orderdate timestamp_ntz, "
+              "o_orderpriority string",
+    "customer": "c_custkey long, c_name string, c_nationkey int, "
+                "c_acctbal double, c_mktsegment string",
+    "lineitem": "l_orderkey long, l_partkey long, l_suppkey long, "
+                "l_linenumber int, l_quantity double, l_extendedprice double, "
+                "l_discount double, l_tax double, l_returnflag string, "
+                "l_linestatus string, l_shipdate timestamp_ntz",
+}
+
+
+def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The fixed-name table ``name`` of ``sf_dir``, read with its
+    declared schema."""
+    return _utc(spark).read.schema(TABLE_SCHEMAS[name]).parquet(
+        f"{sf_dir}/{name}.parquet"
+    )
+
+
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _utc(spark).read.parquet(f"{sf_dir}/events.parquet")
+    return _table(spark, sf_dir, "events")
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _utc(spark).read.parquet(f"{sf_dir}/documents.parquet")
+    return _table(spark, sf_dir, "documents")
 
 
 def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _utc(spark).read.parquet(f"{sf_dir}/embeddings.parquet")
+    return _table(spark, sf_dir, "embeddings")
 
 
 def _fan(df: DataFrame) -> DataFrame:
@@ -307,8 +338,8 @@ def q_asof_join(spark, sf_dir):
 def q_ysb_pipeline(spark, sf_dir):
     """YSB shape: filter → broadcast dim join → tumbling window count/max
     (yahoo_app.hpp:149-176) on orders ⋈ customer."""
-    orders = _utc(spark).read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    orders = _table(spark, sf_dir, "orders")
+    cust = _table(spark, sf_dir, "customer")
     joined = broadcast_dim_join(
         orders.filter(F.col("o_orderstatus") == "O"),
         cust.select("c_custkey", "c_mktsegment"),
@@ -396,7 +427,7 @@ def q_win_count_distinct(spark, sf_dir):
 def q_cube_agg(spark, sf_dir):
     """Grouping-set aggregation (SURVEY.md §2.7: free via the Spark API;
     no reference counterpart)."""
-    li = _utc(spark).read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = _table(spark, sf_dir, "lineitem")
     return (
         li.cube("l_returnflag", "l_linestatus")
         .agg(F.count(F.lit(1)).alias("cnt"), F.round(F.sum("l_quantity"), 4).alias("sum_qty"))
@@ -404,7 +435,7 @@ def q_cube_agg(spark, sf_dir):
 
 
 def q_rollup_agg(spark, sf_dir):
-    orders = _utc(spark).read.parquet(f"{sf_dir}/orders.parquet")
+    orders = _table(spark, sf_dir, "orders")
     return (
         orders.rollup("o_orderstatus", "o_orderpriority")
         .agg(F.count(F.lit(1)).alias("cnt"), F.round(F.sum("o_totalprice"), 2).alias("sum_price"))
@@ -657,8 +688,7 @@ def q_streaming_tumbling(spark, sf_dir):
     # file-stream source requires a directory; stage the table file
     path = tempfile.mkdtemp(prefix="wf_gate_stream_")
     shutil.copy(f"{sf_dir}/events.parquet", os.path.join(path, "events.parquet"))
-    schema = _utc(spark).read.parquet(path).schema
-    src = se.stream_source(spark, path, schema)
+    src = se.stream_source(_utc(spark), path, TABLE_SCHEMAS["events"])
     out = se.stream_win_tb(
         src, ["event_type"], "ts", WinSpec("tb", 3600, 3600),
         aggs={"cnt": F.count(F.lit(1)), "sum_value": F.round(F.sum("value"), 4)},
@@ -730,8 +760,7 @@ def _staged_events_stream(spark, sf_dir):
 
     path = tempfile.mkdtemp(prefix="wf_gate_stream_")
     shutil.copy(f"{sf_dir}/events.parquet", os.path.join(path, "events.parquet"))
-    schema = _utc(spark).read.parquet(path).schema
-    return se.stream_source(spark, path, schema)
+    return se.stream_source(_utc(spark), path, TABLE_SCHEMAS["events"])
 
 
 def q_streaming_hopping(spark, sf_dir):
@@ -1334,8 +1363,8 @@ def q_streaming_dedup(spark, sf_dir):
     path = tempfile.mkdtemp(prefix="wf_gate_sdedup_")
     shutil.copy(f"{sf_dir}/documents.parquet", os.path.join(path, "a.parquet"))
     shutil.copy(f"{sf_dir}/documents.parquet", os.path.join(path, "b.parquet"))
-    schema = _utc(spark).read.parquet(path).schema
-    src = se.stream_source(spark, path, schema, max_files_per_trigger=1)
+    src = se.stream_source(_utc(spark), path, TABLE_SCHEMAS["documents"],
+                           max_files_per_trigger=1)
     out = se.stream_exact_dedup(src, "text", keeper_id="doc_id").select(
         "digest", "doc_id"
     )

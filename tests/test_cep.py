@@ -750,3 +750,34 @@ def test_match_events_kleene_property_sweep(spark):
             )
             want = _pandas_reference_kleene(pdf, preds2, list(quant))
             assert got == want, (trial, quant, got[:4], want[:4])
+
+
+def test_match_events_hot_key_linear_frames(spark):
+    """A hot key (one key, a few thousand rows): the skip and Kleene
+    matchers take their "every later row" mins over a running frame on
+    the reversed order — no UnboundedFollowing frame, which Spark
+    re-aggregates for every row (O(n²) per key) — and still equal the
+    pandas references."""
+    from windflow_spark.plans import audit
+
+    rng = np.random.default_rng(41)
+    n = 3000
+    pdf = pd.DataFrame({
+        "k": "hot",
+        "i": np.arange(n, dtype=np.int64),
+        "ev": rng.choice(list("ABCX"), n, p=[0.3, 0.35, 0.2, 0.15]),
+        "us": np.arange(n, dtype=np.int64) * 5,
+    })
+    df = spark.createDataFrame(pdf)
+    steps = [F.col("ev") == "A", F.col("ev") == "B", F.col("ev") == "C"]
+    preds = [lambda r, e=e: r["ev"] == e for e in "ABC"]
+    for kw in ({"mode": "skip"}, {"quantifiers": "1+1"}, {"quantifiers": "+1+"}):
+        out = cep.match_events(df, "k", "i", steps, ts_col="us", **kw)
+        plan = audit.physical_plan(out)
+        assert "unboundedfollowing" not in plan.lower(), (kw, plan)
+        got = sorted(map(tuple, out.toPandas()[["k", "start_id", "end_id"]].to_numpy()))
+        if "mode" in kw:
+            want = _pandas_reference_skip(pdf, preds)
+        else:
+            want = _pandas_reference_kleene(pdf, preds, kw["quantifiers"])
+        assert got == want and len(want) > 50, kw

@@ -217,3 +217,20 @@ def test_cep_match_single_exchange_no_python(spark, events):
     for marker in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
                    "FlatMapGroupsInPandas", "CartesianProduct"):
         assert marker not in plan, plan
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_entry_declared_schemas_match_parquet(spark, sf):
+    """__spark_entry__ reads its fixed-name tables with declared schemas
+    (no inference job per plan build); each must equal the schema Spark
+    infers from the parquet footer at every scale factor, so a drift
+    fails here instead of reading nulls."""
+    import os
+
+    from pyspark.sql.types import StructType
+
+    import __spark_entry__ as entry
+
+    for name, ddl in entry.TABLE_SCHEMAS.items():
+        path = os.path.join(os.path.dirname(SF), sf, f"{name}.parquet")
+        assert StructType.fromDDL(ddl) == spark.read.parquet(path).schema, (sf, name)

@@ -637,11 +637,12 @@ def test_cb_fold_rejects_nan_values():
     from windflow_spark.streaming.engine import _make_cb_fold
 
     fold = _make_cb_fold(4, 4, {"s": ("sum", "v"), "c": ("count", None)})
-    open_w: dict = {}
-    fired = fold(np.arange(4), {"v": np.ones(4)}, open_w)
-    assert fired == [(0, 4.0, 4, 3)]
+    none = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64), np.empty((0, 2)))
+    kid = np.zeros(4, dtype=np.int64)
+    _open, (fk, fw, fp) = fold(kid, np.arange(4), {"v": np.ones(4)}, none)
+    assert (fk.tolist(), fw.tolist(), fp.tolist()) == ([0], [0], [[4.0, 4.0]])
     with pytest.raises(ValueError, match="NaN"):
-        fold(np.arange(4), {"v": np.array([1.0, np.nan, 1.0, 1.0])}, {})
+        fold(kid, np.arange(4), {"v": np.array([1.0, np.nan, 1.0, 1.0])}, none)
 
 
 def test_stream_cb_eos_flush_restores_batch_parity(spark, tx_path, tdir):
@@ -769,15 +770,146 @@ def test_stream_accumulate_multi_chunk_batch(spark, multi_chunk_batch):
     assert_frames_equal(got, want, ["conv_id", "turn_idx"])
 
 
+def _write_turns(path, keys: int, turns: int, cuts, sort_by=("turn_idx", "conv_id")):
+    """``keys`` conversations of ``turns`` turns each, sorted by
+    ``sort_by`` and split into one parquet file per [a, b) row range of
+    ``cuts``; returns the frame."""
+    turn = np.tile(np.arange(turns, dtype=np.int64), keys)
+    conv = np.repeat(np.arange(keys), turns)
+    pdf = pd.DataFrame({
+        "conv_id": [f"k{c:06d}" for c in conv],
+        "turn_idx": turn,
+        "v": ((turn * 7 + conv * 3) % 11).astype(np.float64),
+    }).sort_values(list(sort_by), kind="stable")
+    os.makedirs(path, exist_ok=True)
+    for k, (a, b) in enumerate(cuts):
+        datagen.write_parquet_us(pdf.iloc[a:b], f"{path}/part-{k}.parquet")
+    return pdf
+
+
+_KG_AGGS = {"s": ("sum", "v"), "c": ("count", None), "am": ("argmax", "v")}
+
+
+def _kg_batch_want(spark, path, spec):
+    """The batch win_seq result of ``_KG_AGGS`` over ``path``."""
+    return win_seq(
+        spark.read.parquet(path), ["conv_id"], "turn_idx", spec,
+        aggs={
+            "s": F.sum("v"), "c": F.count(F.lit(1)),
+            "_mb": F.max(F.struct(F.col("v").alias("v"),
+                                  (-F.col("turn_idx")).alias("ni"))),
+        },
+    ).withColumn("am", (-F.col("_mb.ni")).cast("long")).drop("_mb").toPandas()
+
+
+@pytest.mark.parametrize("on_late", ["drop", "buffer", "assume_ordered"])
+def test_stream_cb_key_groups_equal_batch(spark, tdir, monkeypatch, on_late):
+    """Many keys share each hash bucket (3 buckets here, 8 keys each)
+    and reach the key-group processor as out-of-order Arrow chunks of
+    50 rows over two micro-batches: under every on_late policy, fired ∪
+    flushed == the batch win_seq result, partial windows included, and
+    the state holds one row per bucket."""
+    monkeypatch.setattr(se, "_KEY_BUCKETS", 3)
+    path = str(tdir / f"kg_src_{on_late}")
+    _write_turns(path, 24, 100, [(0, 300), (300, 1200), (1200, 1500), (1500, 2400)])
+    spec = WinSpec("cb", 8, 3)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "50")
+    try:
+        src = se.stream_source(spark, path, spark.read.parquet(path).schema,
+                               max_files_per_trigger=2)
+        stream = se.stream_cb_windows(src, "conv_id", "turn_idx", None, spec,
+                                      on_late=on_late, aggs=_KG_AGGS,
+                                      lateness=5 if on_late == "buffer" else 0)
+        sink, ckpt = str(tdir / f"kg_sink_{on_late}"), str(tdir / f"kg_ckpt_{on_late}")
+        se.run_available_now(stream, sink, ckpt, timeout_sec=300)
+    finally:
+        spark.conf.set(conf, old)
+    flushed = se.flush_cb_partials(spark, ckpt, "conv_id", spec, aggs=_KG_AGGS,
+                                   on_late=on_late)
+    got = spark.read.parquet(sink).unionByName(flushed).toPandas()
+    want = _kg_batch_want(spark, path, spec)
+    cols = ["conv_id", "gwid", "s", "c", "am", "win_end"]
+    assert len(want) == 24 * 34
+    assert_frames_equal(got[cols], want[cols], ["conv_id", "gwid"])
+    assert spark.read.format("statestore").option("path", ckpt).load().count() <= 3
+
+
+def test_stream_cb_resume_under_other_shuffle_partitions(spark, tdir):
+    """The bucket count is a constant of the plan, not the live
+    shuffle-partition setting: a drain resumed from its checkpoint after
+    spark.sql.shuffle.partitions changed must find every key's state in
+    the same bucket, so fired ∪ flushed == the batch result."""
+    path = str(tdir / "kg_resume_src")
+    pdf = _write_turns(path, 40, 60, [(0, 1200)])
+    spec = WinSpec("cb", 8, 3)
+    sink, ckpt = str(tdir / "kg_resume_sink"), str(tdir / "kg_resume_ckpt")
+    schema = spark.read.parquet(path).schema
+
+    def drain():
+        src = se.stream_source(spark, path, schema)
+        se.run_available_now(
+            se.stream_cb_windows(src, "conv_id", "turn_idx", None, spec, aggs=_KG_AGGS),
+            sink, ckpt, timeout_sec=300,
+        )
+
+    drain()
+    datagen.write_parquet_us(pdf.iloc[1200:], f"{path}/part-1.parquet")
+    conf = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        drain()
+    finally:
+        spark.conf.set(conf, old)
+    flushed = se.flush_cb_partials(spark, ckpt, "conv_id", spec, aggs=_KG_AGGS)
+    got = spark.read.parquet(sink).unionByName(flushed).toPandas()
+    want = _kg_batch_want(spark, path, spec)
+    cols = ["conv_id", "gwid", "s", "c", "am", "win_end"]
+    assert len(want) == 40 * 20
+    assert_frames_equal(got[cols], want[cols], ["conv_id", "gwid"])
+
+
+def test_stream_cb_state_bytes_100k_keys(spark, tdir, record_property):
+    """State growth is measured: a drain over 10⁵ keys (two turns each,
+    one per micro-batch, so every key keeps an open window) holds at
+    most _KEY_BUCKETS state rows in every batch. Each batch's state
+    memory and bytes written are recorded; the bytes written stay
+    within 200 per key (the whole state is rewritten, since every
+    bucket receives rows)."""
+    n = 100_000
+    path = str(tdir / "kg_100k_src")
+    _write_turns(path, n, 2, [(0, n), (n, 2 * n)], sort_by=("turn_idx",))
+    src = se.stream_source(spark, path, spark.read.parquet(path).schema,
+                           max_files_per_trigger=1)
+    stream = se.stream_cb_windows(src, "conv_id", "turn_idx", "v", WinSpec("cb", 4, 4))
+    q = (stream.writeStream.format("noop").option("checkpointLocation",
+                                                  str(tdir / "kg_100k_ckpt"))
+         .trigger(availableNow=True).start())
+    assert q.awaitTermination(300)
+    per_batch = [
+        (o["numRowsTotal"], o["memoryUsedBytes"],
+         o["customMetrics"]["rocksdbTotalBytesWritten"])
+        for o in (p["stateOperators"][0] for p in q.recentProgress if p["numInputRows"])
+    ]
+    record_property("cb_state_rows_memory_written_per_batch", per_batch)
+    print("CB state (rows, memory bytes, bytes written) per batch, 1e5 keys:", per_batch)
+    assert len(per_batch) == 2
+    assert all(rows <= se._KEY_BUCKETS for rows, _m, _w in per_batch), per_batch
+    assert all(0 < w <= 200 * n for _r, _m, w in per_batch), per_batch
+
+
 def test_cb_fold_kernels_match_per_window_reference():
     """Property check of the numpy batch-kernel contract: for random
-    sparse ids folded in two spans (so partials also merge), every
-    registry op — hll64 and a histq included — equals a plain
-    per-window reference over the window's members, on tumbling,
-    sliding and hopping (win < slide: ids in gaps fold nowhere) specs.
-    Values are small integers, so argmax ties are common and must keep
-    the smallest id; some fall outside the histogram's range (edge
-    buckets), and hll inputs repeat (registers take the max)."""
+    sparse ids of up to three keys, folded together in two spans (so
+    partials also merge), every registry op — hll64 and a histq
+    included — equals a plain per-window reference over the window's
+    members, on tumbling, sliding and hopping (win < slide: ids in gaps
+    fold nowhere) specs. Values are small integers, so argmax ties are
+    common and must keep the smallest id; some fall outside the
+    histogram's range (edge buckets), and hll inputs repeat (registers
+    take the max)."""
     name = "histq_t_prop"
     se.register_quantile_hist_op(name, lo=1.0, hi=7.0, bins=4, q=0.5)
     try:
@@ -785,50 +917,67 @@ def test_cb_fold_kernels_match_per_window_reference():
                "std", "hll64", name]
         aggs = {op: (op, "h" if op == "hll64" else "v") for op in ops}
         aggs["count"] = ("count", None)
+        cb_ops = se._cb_ops(aggs)
         hist_fin = se._CB_OPS[name][3]
         rng = np.random.default_rng(11)
         pool = rng.integers(0, 1 << 24, 6)
         for case in range(60):
             win, slide = [(6, 6), (8, 3), (3, 7), (5, 2), (1, 4)][case % 5]
-            ids = np.sort(rng.choice(120, size=rng.integers(1, 60), replace=False))
+            n_keys = 1 + case % 3
+            ids = [np.sort(rng.choice(120, size=rng.integers(1, 60), replace=False))
+                   for _ in range(n_keys)]
+            kid = np.repeat(np.arange(n_keys), [len(i) for i in ids])
+            ids = np.concatenate(ids)
             vals = {"v": rng.integers(0, 9, len(ids)).astype(np.float64),
                     "h": rng.choice(pool, len(ids)).astype(np.float64)}
             fold = se._make_cb_fold(win, slide, aggs)
-            open_w: dict = {}
-            cut = int(rng.integers(0, len(ids) + 1))
+            open_ = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64),
+                     np.empty((0, se._cb_slots(aggs))))
+            # each key's rows split at its own random cut
+            cut = np.zeros(len(ids), dtype=bool)
+            for k in range(n_keys):
+                rows = np.flatnonzero(kid == k)
+                cut[rows[:rng.integers(0, len(rows) + 1)]] = True
             got = {}
-            for part in (slice(0, cut), slice(cut, None)):
-                if len(ids[part]):
-                    for w, *outs, _end in fold(
-                        ids[part], {c: x[part] for c, x in vals.items()}, open_w
-                    ):
-                        got[w] = outs
-            for w, p in open_w.items():
-                got[w] = se._cb_finalize(se._cb_ops(aggs), p)
+
+            def emit(windows):
+                wk, wid, parts = windows
+                outs = se._cb_finalize(cb_ops, parts)
+                for i, (k, w) in enumerate(zip(wk.tolist(), wid.tolist())):
+                    assert (k, w) not in got, (case, k, w)
+                    got[k, w] = [col[i] for col in outs]
+
+            for part in (cut, ~cut):
+                if part.any():
+                    open_, fired = fold(kid[part], ids[part],
+                                        {c: x[part] for c, x in vals.items()}, open_)
+                    emit(fired)
+            emit(open_)
             want = {}
-            for w in range(int(ids[-1]) // slide + 1):
-                m = (ids >= w * slide) & (ids < w * slide + win)
-                if not m.any():
-                    continue
-                v, i, h = vals["v"][m], ids[m], vals["h"][m].astype(np.int64)
-                regs = np.zeros(64)
-                for x in h:
-                    b, r = (x >> 16) & 63, 17 - int(x & 0xFFFF).bit_length()
-                    regs[b] = max(regs[b], r)
-                hist = np.zeros(4)
-                for x in v:
-                    hist[min(3, max(0, int((x - 1) // 1.5)))] += 1
-                want[w] = [v.sum(), len(v), v.min(), v.max(), v.mean(),
-                           int(i[v == v.max()].min()), v.var(), v.std(),
-                           se._hll_final(list(regs)), hist_fin(list(hist))]
+            for k in range(n_keys):
+                for w in range(int(ids[kid == k].max()) // slide + 1):
+                    m = (kid == k) & (ids >= w * slide) & (ids < w * slide + win)
+                    if not m.any():
+                        continue
+                    v, i, h = vals["v"][m], ids[m], vals["h"][m].astype(np.int64)
+                    regs = np.zeros(64)
+                    for x in h:
+                        b, r = (x >> 16) & 63, 17 - int(x & 0xFFFF).bit_length()
+                        regs[b] = max(regs[b], r)
+                    hist = np.zeros(4)
+                    for x in v:
+                        hist[min(3, max(0, int((x - 1) // 1.5)))] += 1
+                    want[k, w] = [v.sum(), len(v), v.min(), v.max(), v.mean(),
+                                  int(i[v == v.max()].min()), v.var(), v.std(),
+                                  se._hll_final(list(regs)), hist_fin(list(hist))]
             assert sorted(got) == sorted(want), (case, win, slide)
-            for w in want:
-                np.testing.assert_allclose(got[w], want[w], rtol=1e-9, atol=1e-9,
-                                           err_msg=f"case {case} window {w}")
+            for kw in want:
+                np.testing.assert_allclose(got[kw], want[kw], rtol=1e-9, atol=1e-9,
+                                           err_msg=f"case {case} window {kw}")
         bad = {c: x.copy() for c, x in vals.items()}
         bad["v"][0] = np.nan
         with pytest.raises(ValueError, match="NaN"):
-            fold(ids, bad, {})
+            fold(kid, ids, bad, open_)
     finally:
         del se._CB_OPS[name]
 

@@ -112,7 +112,7 @@ def embeddings() -> None:
             vecs[m] = rng.normal(mu, np.maximum(sd, 1e-6), (m.sum(), dim))
         f = pd.DataFrame({
             "vec_id": np.arange(r * n, (r + 1) * n, dtype=np.int64),
-            "embedding": [row.astype(np.float64) for row in vecs],
+            "embedding": [row.astype(np.float32) for row in vecs],
             "label": labels.astype(np.int32),
         })
         frames.append(f)

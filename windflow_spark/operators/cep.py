@@ -87,10 +87,10 @@ def match_events(
     does not backtrack to a shorter sub-run. Emits ``end_id`` of the
     greedy match; overlapping starts each emit their own match.
     Plan: the per-+-step run boundary is "first ¬p strictly after" —
-    a running min over (1, unboundedFollowing) in the SAME keyed
-    window as the flags, its struct carrying the next step's
-    completion (r8 zero-join formulation; no self-joins, one
-    exchange).
+    a running min over every later row (``_backward``: a running
+    frame over the reversed order, linear per key), its struct
+    carrying the next step's completion (r8 zero-join formulation; no
+    self-joins, one exchange).
 
     ``order_by``: optional window-ordering columns that MUST induce
     the same per-key total order as ``id_col`` (e.g. the columns the
@@ -173,6 +173,18 @@ def _normalize_quantifiers(
     return quant
 
 
+def _backward(keys: list[str], order: Sequence[Column]):
+    """The keyed window over the REVERSED order. Its running frames
+    reach every later row: (UNBOUNDED PRECEDING, 1 PRECEDING) = the
+    rows strictly after the current one, (UNBOUNDED PRECEDING, CURRENT
+    ROW) = the rows at or after it. Spark keeps a running aggregate
+    over such a frame, so a min over it is linear per key, where a
+    (1 FOLLOWING, UNBOUNDED FOLLOWING) frame is re-aggregated for every
+    row — O(n²) per key. ``order`` holds plain ascending columns (the
+    ``order_by`` contract), so each reverses with ``desc()``."""
+    return Window.partitionBy(*keys).orderBy(*[o.desc() for o in order])
+
+
 def _match_events_kleene(
     df: DataFrame,
     keys: list[str],
@@ -201,7 +213,7 @@ def _match_events_kleene(
       resolves to its own (id, ts).
     - ``q_j='+'``: the run STOP for a row is the first LATER row where
       the predicate fails OR contiguity breaks: a running min over
-      (1, unboundedFollowing) of a struct keyed on the stop
+      every later row (``_backward``) of a struct keyed on the stop
       row's id — which CARRIES the fields the binding needs from that
       row (prev id = the run's true last id, prev ts, and the
       already-computed ``E_{j+1}`` for the next step's completion).
@@ -220,12 +232,10 @@ def _match_events_kleene(
     k = len(steps)
     idl = F.col(id_col).cast("long")
     w = Window.partitionBy(*keys).orderBy(*(order or [F.col(id_col)]))
-    # "first stop strictly after this row": min over the
-    # (1 FOLLOWING, UNBOUNDED FOLLOWING) frame directly — identical to
-    # lead(min over (currentRow, ∞), 1) but ONE Window node per step
-    # instead of two (the lead cannot fuse with the min it shifts)
-    fwd1 = w.rowsBetween(1, Window.unboundedFollowing)
-    wpart = Window.partitionBy(*keys)
+    back = _backward(keys, order or [F.col(id_col)])
+    later = back.rowsBetween(Window.unboundedPreceding, -1)
+    # at or after this row: its running max is the key's max
+    rest = back.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     base = df
     for j, s in enumerate(steps):
         base = base.withColumn(
@@ -239,10 +249,10 @@ def _match_events_kleene(
         # a final + run may end at the partition end: end = max id,
         # ts_last = the max row's ts (carried in the same unbounded max)
         if ts_col is not None:
-            mx = F.max(F.struct(idl.alias("i"), tsl.alias("t"))).over(wpart)
+            mx = F.max(F.struct(idl.alias("i"), tsl.alias("t"))).over(rest)
             base = base.withColumn("_maxid", mx["i"]).withColumn("_maxts", mx["t"])
         else:
-            base = base.withColumn("_maxid", F.max(idl).over(wpart))
+            base = base.withColumn("_maxid", F.max(idl).over(rest))
         base = base.withColumn("_prevts", F.lag(tsl).over(w)) if ts_col else base
 
     def _done(j: int) -> Column:
@@ -272,7 +282,7 @@ def _match_events_kleene(
                 f"_stop{j}",
                 F.min(
                     F.when(~F.col(f"_s{j}") | ~F.col("_cont"), F.struct(*carry))
-                ).over(fwd1),
+                ).over(later),
             )
         ok = F.col(f"_s{j}") & (F.lit(True) if j == 0 else F.col("_cont"))
         if j == k - 1:
@@ -321,7 +331,7 @@ def _match_events_skip(
 
     ``_p{j}`` at a row = a struct describing the greedy completion of
     steps j..k-1 binding STRICTLY AFTER the row: a running min over
-    the (1, unboundedFollowing) frame of
+    every later row (``_backward``) of
     ``struct(id, <completion>)`` on step-j rows. The struct compares
     on the (per-key unique) id, so
     the min IS the earliest step-j row — and it CARRIES that row's
@@ -338,10 +348,9 @@ def _match_events_skip(
     the start — never backtracks, so ``within`` stays exact."""
     k = len(steps)
     idl = F.col(id_col).cast("long")
-    w = Window.partitionBy(*keys).orderBy(*(order or [F.col(id_col)]))
-    # min over (1 FOLLOWING, ∞) ≡ lead(min over (currentRow, ∞), 1)
-    # in one Window node instead of two
-    fwd1 = w.rowsBetween(1, Window.unboundedFollowing)
+    later = _backward(keys, order or [F.col(id_col)]).rowsBetween(
+        Window.unboundedPreceding, -1
+    )
     base = df
     for j, s in enumerate(steps):
         base = base.withColumn(
@@ -363,7 +372,7 @@ def _match_events_skip(
                 fields.append(nxt["ts_last"].alias("ts_last"))
         base = base.withColumn(
             f"_p{j}",
-            F.min(F.when(F.col(f"_s{j}"), F.struct(*fields))).over(fwd1),
+            F.min(F.when(F.col(f"_s{j}"), F.struct(*fields))).over(later),
         )
     p1 = F.col("_p1")
     cond = F.col("_s0") & p1["end_id"].isNotNull()

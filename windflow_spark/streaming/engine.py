@@ -4,10 +4,11 @@ Same plan shapes as the batch operators, over ``readStream``:
 - TB windows → watermarked windowed hash-aggregate
   (StateStoreSave; RocksDB provider at scale — session.get_spark(streaming=True));
 - session windows → native ``F.session_window`` (state-store session merge);
-- CB (count-based) windows → ``applyInPandasWithState`` keyed stateful
-  processor (Spark has no native count windows): per-key state carries
-  the running tuple count and open-window partials; windows fire when
-  their last tuple arrives, mirroring Triggerer_CB
+- CB (count-based) windows → ``applyInPandasWithState`` key-group
+  stateful processor (Spark has no native count windows): grouped by a
+  hash bucket of the key, one state row per bucket carries its keys'
+  last ids and open-window partials; windows fire when their last
+  tuple arrives, mirroring Triggerer_CB
   (reference includes/window.hpp:49-67);
 - stream-stream correlation join → watermarked interval equi-join
   (StreamingSymmetricHashJoin);
@@ -29,6 +30,7 @@ from __future__ import annotations
 import json
 import math
 from collections.abc import Iterator, Sequence
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -281,11 +283,12 @@ def stream_session(
 # with register_cb_op(), which property-checks the declared fold for
 # decomposability before admitting it.
 #
-# Batch kernel contract: ``kernel(v, ids, starts)`` over one key's
-# expanded rows sorted by window id — ``v`` the in_col values (None for
-# a fold over no column), ``ids`` the tuple ids, ``starts`` the first
-# row of each window's segment (rows inside a segment are in ascending
-# id order). It returns ``n_slots`` arrays (or an (n_slots, windows)
+# Batch kernel contract: ``kernel(v, ids, starts)`` over the expanded
+# rows of a bucket's keys sorted by (key, window id) — ``v`` the in_col
+# values (None for a fold over no column), ``ids`` the tuple ids,
+# ``starts`` the first row of each (key, window) segment (rows inside a
+# segment are in ascending id order). A kernel must reduce each segment
+# on its own. It returns ``n_slots`` arrays (or an (n_slots, windows)
 # array) holding one partial per window: np.<ufunc>.reduceat(v, starts)
 # for ufunc folds, np.<ufunc>.at over ``_seg_of(starts, n)`` for
 # scatter folds.
@@ -477,10 +480,10 @@ def register_cb_op(
 
     - ``n_slots``: float64 partial slots per window.
     - ``batch(v, ids, starts)``: the numpy segment kernel — receives
-      one key's rows sorted by window id (``v`` the input column's
-      float64 values, ``ids`` the int64 tuple ids, ``starts`` the
-      first row of each window's segment) and returns ``n_slots``
-      arrays with one partial per window, e.g.
+      the rows of a bucket's keys sorted by (key, window id) (``v``
+      the input column's float64 values, ``ids`` the int64 tuple ids,
+      ``starts`` the first row of each (key, window) segment) and
+      returns ``n_slots`` arrays with one partial per window, e.g.
       ``[np.minimum.reduceat(v, starts)]`` (see the contract above
       ``_CB_OPS``).
     - ``merge(old_slots, new_slots) -> slots``: cross-batch partial
@@ -491,7 +494,7 @@ def register_cb_op(
       arrays. With it, the statestore EOS flush stays a pure scan +
       projection; without it, ``flush_cb_partials`` transparently
       routes through the mapInPandas arm (Python finalize over state
-      rows — one row per key, no shuffle, still no replay).
+      rows — one row per key bucket, no shuffle, still no replay).
     - ``validate_with`` (recommended): a 1-D float sample. The
       declaration is property-checked for DECOMPOSABILITY before
       registration: for every split point, merging the two halves'
@@ -611,22 +614,48 @@ def _cb_ops(aggs: dict) -> list:
     return [(_CB_OPS[op], c) for op, c in aggs.values()]
 
 
-def _cb_finalize(ops: list, part) -> list:
-    """Finalized output values of one window's partial slots."""
-    outs, pos = [], 0
+def _cb_slots(aggs: dict) -> int:
+    """Partial slots per window of ``aggs`` (the width of a ``parts`` row)."""
+    return sum(_CB_OPS[op][0] for op, _c in aggs.values())
+
+
+def _cb_finalize(ops: list, parts: "np.ndarray") -> list:
+    """Finalized output columns, one list per agg, of windows' partial
+    slot rows ``parts`` (windows × slots)."""
+    rows, cols, pos = parts.tolist(), [], 0
     for (ns, _k, _m, fin, *_), _c in ops:
-        outs.append(fin(list(part[pos:pos + ns])))
+        cols.append([fin(r[pos:pos + ns]) for r in rows])
         pos += ns
-    return outs
+    return cols
+
+
+def _cb_merge(ops: list, old: list, new: list) -> list:
+    """Cross-batch merge of one window's partial slots, op by op."""
+    out, pos = [], 0
+    for (ns, _k, merge, *_), _c in ops:
+        out += merge(old[pos:pos + ns], new[pos:pos + ns])
+        pos += ns
+    return out
+
+
+def _run_ends(kid: "np.ndarray") -> "np.ndarray":
+    """Index of the last row of each run of equal ``kid`` (rows sorted
+    by key index)."""
+    return np.flatnonzero(np.append(kid[1:] != kid[:-1], True)) if len(kid) else kid
 
 
 def _make_cb_fold(win: int, slide: int, aggs: dict):
-    """Build the vectorized CB fold kernel of stream_cb_windows: fold
-    sorted ids into open windows, return fired (gwid, finalized...,
-    win_end) rows. Fully vectorized —
-    the wid explosion is arange arithmetic, stable-sorted by window id;
-    every registry kernel then reduces numpy segments (``batch(v, ids,
-    starts)``, see the contract above ``_CB_OPS``) — no pandas.
+    """Build the vectorized CB fold kernel of stream_cb_windows:
+    ``fold(kid, ids, vals, open_) -> (open_, fired)``.
+
+    The rows of one or more keys, sorted by (key index ``kid``, id),
+    fold into the open windows ``open_`` = (key index, wid, slot rows);
+    it returns the windows still open and the fired ones in the same
+    layout. The wid explosion is arange arithmetic, stable-sorted by
+    (key, wid); every registry kernel then reduces the (key, wid)
+    segments of all keys at once (``batch(v, ids, starts)``, see the
+    contract above ``_CB_OPS``), and ``merge`` runs only for a window
+    that was open and also receives rows — no pandas, no per-key loop.
 
     Columns feeding a non-count fold must be null/NaN-free: SQL
     aggregates skip a null while the numpy kernels would propagate a
@@ -636,7 +665,7 @@ def _make_cb_fold(win: int, slide: int, aggs: dict):
     )
     ops = _cb_ops(aggs)
 
-    def _fold(ids: "np.ndarray", vals: dict, open_w: dict) -> list:
+    def _fold(kid: "np.ndarray", ids: "np.ndarray", vals: dict, open_: tuple):
         for c in strict_cols:
             if np.isnan(vals[c]).any():
                 raise ValueError(
@@ -644,75 +673,195 @@ def _make_cb_fold(win: int, slide: int, aggs: dict):
                     "decomposable fold requires non-null values "
                     "(filter or fillna upstream)"
                 )
+        wk0, wid0, parts0 = open_
         last = ids // slide
         first = np.maximum(0, (ids - win) // slide + 1)
         # hopping (win < slide): ids in a gap have last < first — an
         # empty wid range (includes/win_seq.hpp:326-338), clip to 0
         counts = np.maximum(0, last - first + 1).astype(np.int64)
         total = int(counts.sum())
-        if total:  # an empty expansion would still make one segment
-            row_idx = np.repeat(np.arange(len(ids)), counts)
-            offs = np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
-            wid = first[row_idx] + offs
-            # stable: ids stay ascending inside each window's segment
-            order = np.argsort(wid, kind="stable")
-            wid, row_idx = wid[order], row_idx[order]
-            starts = np.flatnonzero(np.concatenate(([True], wid[1:] != wid[:-1])))
-            seg_ids = ids[row_idx]
-            seg_v = {c: v[row_idx] for c, v in vals.items()}
-            mat = np.vstack([
-                np.asarray(kern(seg_v.get(c), seg_ids, starts), dtype=np.float64)
-                .reshape(ns, -1)
-                for (ns, kern, *_), c in ops
-            ]).T
-            for w, new in zip(wid[starts].tolist(), mat.tolist()):
-                old = open_w.get(w)
-                if old is None:
-                    open_w[w] = new
-                    continue
-                merged, pos = [], 0
-                for (ns, _k, merge, *_), _c in ops:
-                    merged += merge(old[pos:pos + ns], new[pos:pos + ns])
-                    pos += ns
-                open_w[w] = merged
-        # Triggerer_CB: fire windows whose last tuple is in this span
-        fired = []
-        f_mask = (ids - win + 1 >= 0) & ((ids - win + 1) % slide == 0)
-        for w in ((ids[f_mask] - win + 1) // slide).tolist():
-            part = open_w.pop(w, None)
-            if part is not None:
-                fired.append((w, *_cb_finalize(ops, part), w * slide + win - 1))
-        return fired
+        if not total:  # an empty expansion would still make one segment
+            return open_, (wk0[:0], wid0[:0], parts0[:0])
+        row = np.repeat(np.arange(len(ids)), counts)
+        wid = first[row] + np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
+        # stable: ids stay ascending inside each (key, window) segment
+        order = np.lexsort((wid, kid[row]))
+        row, wid = row[order], wid[order]
+        k = kid[row]
+        head = np.ones(total, dtype=bool)
+        head[1:] = (k[1:] != k[:-1]) | (wid[1:] != wid[:-1])
+        starts = np.flatnonzero(head)
+        seg_ids = ids[row]
+        seg_v = {c: v[row] for c, v in vals.items()}
+        parts = np.vstack([
+            np.asarray(kern(seg_v.get(c), seg_ids, starts), dtype=np.float64)
+            .reshape(ns, -1)
+            for (ns, kern, *_), c in ops
+        ]).T
+        sk, sw = k[starts], wid[starts]
+        # Triggerer_CB: window w fires when its last tuple (id
+        # w*slide+win-1) arrives — the largest id of its segment
+        fire = seg_ids[np.append(starts[1:], total) - 1] == sw * slide + win - 1
+        if len(wk0):
+            # a window open in state that also got rows: merge the two
+            # partials (stable sort puts the state entry first)
+            ak, aw = np.concatenate([wk0, sk]), np.concatenate([wid0, sw])
+            o = np.lexsort((aw, ak))
+            dup = (ak[o[1:]] == ak[o[:-1]]) & (aw[o[1:]] == aw[o[:-1]])
+            old, new = o[:-1][dup], o[1:][dup] - len(wk0)
+            for i, j in zip(old.tolist(), new.tolist()):
+                parts[j] = _cb_merge(ops, parts0[i].tolist(), parts[j].tolist())
+            stay = np.ones(len(wk0), dtype=bool)
+            stay[old] = False
+            wk0, wid0, parts0 = wk0[stay], wid0[stay], parts0[stay]
+        still = ~fire
+        open_ = (np.concatenate([wk0, sk[still]]), np.concatenate([wid0, sw[still]]),
+                 np.concatenate([parts0, parts[still]]))
+        return open_, (sk[fire], sw[fire], parts[fire])
 
     return _fold
 
 
-def _drop_seen(ids: "np.ndarray", vals: dict, last_id: int):
-    """The reference's out-of-order drop rule over id-sorted rows: drop
-    ids at or below the last folded one, and repeated ids (first
-    occurrence wins)."""
-    keep = ids > last_id
-    keep[1:] &= ids[1:] != ids[:-1]
-    return ids[keep], {c: v[keep] for c, v in vals.items()}
+#: Hash buckets of the key-group processors (``stream_cb_windows``,
+#: ``stream_accumulate``). Each groups its input by
+#: ``pmod(xxhash64(key), _KEY_BUCKETS)`` and keeps ONE state row per
+#: bucket holding every key routed to it — the keyMap of a WindFlow
+#: Win_Seq replica (win_seq.hpp:126) — so a micro-batch costs one
+#: Python call per bucket, not one per key. A constant, never read from
+#: spark.sql.shuffle.partitions: Spark restores that setting from the
+#: checkpoint of a stateful query, but a bucket count baked into the
+#: plan from the live conf would not be, and a restart under another
+#: setting would move keys to other buckets and silently lose their
+#: state. 128 trades per-call cost against parallelism (no more than
+#: this many tasks of the stateful operator get rows) and row size: a CB
+#: drain of 33,057 rows over 6,000 keys (two micro-batches, local[4] on
+#: a 4-vCPU host, median of 8 reps) took 2.23 s at 64 buckets, 2.25 s
+#: at 128, 2.50 s at 256 and 3.5 s at 1,024; one call per key took 5.6 s.
+_KEY_BUCKETS = 128
 
 
-def _key_rows(pdfs: Iterator[pd.DataFrame], id_col: str, cols: list[str]):
-    """One key's rows of a micro-batch as numpy arrays, sorted by id
-    ONCE across all of its Arrow chunks (a multi-file micro-batch can
-    hand the chunks over in any id order)."""
-    chunks = [p for p in pdfs if len(p)]
-    ids = np.concatenate(
-        [p[id_col].to_numpy(dtype=np.int64) for p in chunks]
-        or [np.empty(0, dtype=np.int64)]
+def _key_groups(df: DataFrame, key: str, cols: list[str]):
+    """``df`` projected to (key, cols) and grouped by the key's bucket."""
+    return (
+        df.select(*dict.fromkeys([key, *cols]))
+        .withColumn("_bk", F.pmod(F.xxhash64(key), F.lit(_KEY_BUCKETS)))
+        .groupBy("_bk")
     )
-    order = np.argsort(ids, kind="stable")
-    vals = {
-        c: np.concatenate(
-            [p[c].to_numpy(dtype=np.float64) for p in chunks] or [np.empty(0)]
-        )[order]
-        for c in cols
-    }
-    return ids[order], vals
+
+
+def _bucket_rows(pdfs: Iterator[pd.DataFrame], key: str, id_col: str,
+                 cols: list[str], known: "np.ndarray"):
+    """A bucket's rows of one micro-batch, gathered across all of its
+    Arrow chunks and sorted ONCE by (key, id) — a multi-file micro-batch
+    hands the chunks over in any id order. Returns ``(keys, kid, ids,
+    vals)``: ``keys`` is ``known`` (the bucket's keys from state)
+    followed by the keys first seen here, ``kid`` indexes it per row."""
+    chunks = [p for p in pdfs if len(p)]
+
+    def col(c, dtype):
+        return np.concatenate(
+            [p[c].to_numpy(dtype=dtype) for p in chunks] or [np.empty(0, dtype=dtype)]
+        )
+
+    codes, uniq = pd.factorize(col(key, object))
+    idx = pd.Index(known).get_indexer(uniq)
+    new = idx < 0
+    idx[new] = len(known) + np.arange(int(new.sum()))
+    kid, ids = idx[codes], col(id_col, np.int64)
+    order = np.lexsort((ids, kid))
+    return (np.concatenate([known, uniq[new]]), kid[order], ids[order],
+            {c: col(c, np.float64)[order] for c in cols})
+
+
+#: one state row per bucket: every key with its last folded id; the
+#: open windows as (key index, wid, slot row); the ``buffer`` policy's
+#: held rows as (key index, id) plus one value array per fold column
+_CB_STATE = (
+    "keys array<string>, last_ids array<long>, wk array<long>, "
+    "wids array<long>, parts array<array<double>>, bk array<long>, "
+    "buf_ids array<long>, buf_vals array<array<double>>"
+)
+
+
+class _CBState(NamedTuple):
+    """One bucket's CB state as numpy arrays (fields as ``_CB_STATE``)."""
+
+    keys: "np.ndarray"
+    last: "np.ndarray"
+    wk: "np.ndarray"
+    wid: "np.ndarray"
+    parts: "np.ndarray"  # open windows × slots
+    bk: "np.ndarray"
+    bids: "np.ndarray"
+    bvals: "np.ndarray"  # fold columns × buffered rows
+
+    @classmethod
+    def load(cls, row, n_slots: int, n_cols: int) -> "_CBState":
+        """From a state row (``state.get`` or a state-store read), or
+        empty for ``None``."""
+        keys, last, wk, wid, parts, bk, bids, bvals = row or ([],) * 8
+        i64 = lambda a: np.asarray(a, dtype=np.int64)
+        f64 = lambda a, shape: np.asarray(list(a), dtype=np.float64).reshape(shape)
+        return cls(np.asarray(keys, dtype=object), i64(last), i64(wk), i64(wid),
+                   f64(parts, (len(wid), n_slots)), i64(bk), i64(bids),
+                   f64(bvals, (n_cols, len(bids))))
+
+    def row(self) -> tuple:
+        return tuple(a.tolist() for a in self)
+
+
+def _cb_step(st: _CBState, kid, ids, vals: dict, fold, on_late: str,
+             lateness: int):
+    """Fold one micro-batch of a bucket's rows (sorted by (kid, id),
+    ``kid`` indexing ``st.keys``) into its state under the ``on_late``
+    policy; returns the new state and the fired windows."""
+    cols = list(vals)
+    if on_late == "buffer":
+        kid, ids = np.concatenate([st.bk, kid]), np.concatenate([st.bids, ids])
+        vals = {c: np.concatenate([st.bvals[j], vals[c]]) for j, c in enumerate(cols)}
+        # stable: a held row wins over a repeat of its id
+        order = np.lexsort((ids, kid))
+        kid, ids, vals = kid[order], ids[order], {c: v[order] for c, v in vals.items()}
+        # fold only ids <= (the key's max id − lateness); hold the rest
+        ends = _run_ends(kid)
+        ripe = ids <= np.repeat(ids[ends] - lateness, np.diff(ends, prepend=-1))
+        held = ~ripe
+        st = st._replace(bk=kid[held], bids=ids[held], bvals=np.array(
+            [vals[c][held] for c in cols], dtype=np.float64
+        ).reshape(len(cols), int(held.sum())))
+        kid, ids, vals = kid[ripe], ids[ripe], {c: v[ripe] for c, v in vals.items()}
+    if on_late != "assume_ordered":
+        # the reference's drop rule, per key: ids at or below the key's
+        # last folded one, and repeated ids (first occurrence wins)
+        keep = ids > st.last[kid]
+        keep[1:] &= (ids[1:] != ids[:-1]) | (kid[1:] != kid[:-1])
+        kid, ids, vals = kid[keep], ids[keep], {c: v[keep] for c, v in vals.items()}
+        ends = _run_ends(kid)
+        last = st.last.copy()
+        last[kid[ends]] = ids[ends]
+        st = st._replace(last=last)
+    (wk, wid, parts), fired = fold(kid, ids, vals, (st.wk, st.wid, st.parts))
+    return st._replace(wk=wk, wid=wid, parts=parts), fired
+
+
+def _cb_frame(keys, windows: tuple, ops: list, names: list[str], key: str,
+              spec: WinSpec) -> pd.DataFrame:
+    """Finalized output rows of ``windows`` = (key index, wid, slot
+    rows), sorted by (key, gwid)."""
+    wk, wid, parts = windows
+    rank = np.empty(len(keys), dtype=np.int64)
+    rank[np.argsort(keys, kind="stable")] = np.arange(len(keys))
+    order = np.lexsort((wid, rank[wk]))
+    wk, wid, parts = wk[order], wid[order], parts[order]
+    return pd.DataFrame({
+        key: keys[wk], "gwid": wid, **dict(zip(names, _cb_finalize(ops, parts))),
+        "win_end": wid * spec.slide + spec.win - 1,
+    })
+
+
+def _cb_out_schema(key: str, aggs: dict) -> str:
+    out_cols = ", ".join(f"{n} {_CB_OPS[op][4]}" for n, (op, _c) in aggs.items())
+    return f"{key} string, gwid long, {out_cols}, win_end long"
 
 
 def stream_cb_windows(
@@ -725,11 +874,13 @@ def stream_cb_windows(
     aggs: dict[str, tuple[str, str | None]] | None = None,
     lateness: int = 0,
 ) -> DataFrame:
-    """Count-based windows in streaming: keyed stateful processor via
-    applyInPandasWithState over the input projected to (key, id_col,
-    fold columns); each key's rows of a micro-batch are sorted by id
-    and folded ONCE, across all of its Arrow chunks, by numpy segment
-    kernels.
+    """Count-based windows in streaming: a key-group stateful processor
+    (applyInPandasWithState grouped by the key's hash bucket,
+    ``_KEY_BUCKETS``) over the input projected to (key, id_col, fold
+    columns). Per micro-batch, ONE Python call per bucket sorts the
+    bucket's rows by (key, id) across all of its Arrow chunks, applies
+    the ``on_late`` rule per key with segment operations and folds every
+    key at once with the numpy segment kernels.
 
     A tuple with per-key monotone id ``i`` belongs to wids
     [max(0, floor((i-win)/slide)+1), floor(i/slide)]; window w fires
@@ -759,6 +910,10 @@ def stream_cb_windows(
     - "assume_ordered": trust per-key arrival order across batches
       (single-writer sources); cheapest, silently wrong under disorder.
     Within a micro-batch, a key's rows are always processed in id order.
+
+    State is one row per bucket (``_CB_STATE``): at most
+    ``_KEY_BUCKETS`` rows, each holding its keys' last ids, open
+    windows and held rows.
     """
     if on_late not in ("assume_ordered", "drop", "buffer"):
         raise ValueError(f"unknown on_late policy {on_late!r}")
@@ -769,66 +924,26 @@ def stream_cb_windows(
     for name, (op, _c) in aggs.items():
         if op not in _CB_OPS:
             raise ValueError(f"agg {name!r}: unknown op {op!r} (have {sorted(_CB_OPS)})")
-    win, slide = spec.win, spec.slide
     # input columns feeding any fold (count-with-None folds over ids)
     in_cols = sorted({c for _, c in aggs.values() if c is not None})
-    out_cols = ", ".join(
-        f"{n} {_CB_OPS[op][4]}" for n, (op, _c) in aggs.items()
-    )
-    out_schema = f"{key} string, gwid long, {out_cols}, win_end long"
-    state_schema = (
-        "wids array<long>, parts array<array<double>>, last_id long, "
-        "buf_ids array<long>, buf_vals array<array<double>>"
-    )
-    _fold = _make_cb_fold(win, slide, aggs)
+    n_slots, ops, names = _cb_slots(aggs), _cb_ops(aggs), list(aggs)
+    fold = _make_cb_fold(spec.win, spec.slide, aggs)
 
     def proc(
-        k: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+        _bk: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        ids, vals = _key_rows(pdfs, id_col, in_cols)
-        if state.exists:
-            wids, parts, last_id, buf_ids, buf_vals = state.get
-            open_w = {w: list(p) for w, p in zip(wids, parts)}
-        else:
-            open_w, last_id, buf_ids, buf_vals = {}, -1, [], [[] for _ in in_cols]
-        if on_late == "buffer":
-            ids = np.concatenate([np.asarray(buf_ids, dtype=np.int64), ids])
-            vals = {c: np.concatenate([np.asarray(b, dtype=np.float64), vals[c]])
-                    for c, b in zip(in_cols, buf_vals)}
-            order = np.argsort(ids, kind="stable")
-            ids, vals = ids[order], {c: v[order] for c, v in vals.items()}
-            thresh = int(ids[-1]) - lateness if len(ids) else -1
-            ripe = ids <= thresh
-            buf_ids = ids[~ripe].tolist()
-            buf_vals = [vals[c][~ripe].tolist() for c in in_cols]
-            ids, vals = ids[ripe], {c: v[ripe] for c, v in vals.items()}
-        if on_late in ("drop", "buffer"):
-            ids, vals = _drop_seen(ids, vals, last_id)
-            if len(ids):
-                last_id = int(ids[-1])
-        fired = _fold(ids, vals, open_w) if len(ids) else []
-        items = sorted(open_w.items())
-        state.update(
-            (
-                [w for w, _ in items],
-                [list(map(float, p)) for _, p in items],
-                last_id,
-                list(buf_ids),
-                [list(b) for b in buf_vals],
-            )
-        )
-        if fired:
-            yield pd.DataFrame(
-                [(k[0], *row) for row in sorted(fired)],
-                columns=[key, "gwid", *aggs.keys(), "win_end"],
-            )
+        st = _CBState.load(state.get if state.exists else None, n_slots, len(in_cols))
+        keys, kid, ids, vals = _bucket_rows(pdfs, key, id_col, in_cols, st.keys)
+        st = st._replace(keys=keys, last=np.concatenate(
+            [st.last, np.full(len(keys) - len(st.keys), -1, dtype=np.int64)]))
+        st, fired = _cb_step(st, kid, ids, vals, fold, on_late, lateness)
+        state.update(st.row())
+        if len(fired[0]):
+            yield _cb_frame(keys, fired, ops, names, key, spec)
 
-    return (
-        df.select(*dict.fromkeys([key, id_col, *in_cols]))
-        .groupBy(key)
-        .applyInPandasWithState(
-            proc, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
+    return _key_groups(df, key, [id_col, *in_cols]).applyInPandasWithState(
+        proc, _cb_out_schema(key, aggs), _CB_STATE, "append",
+        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -1350,8 +1465,10 @@ def flush_cb_partials(
     (``spark.read.format("statestore")``) reads the checkpoint's last
     committed state snapshot as a DataFrame — and because
     ``stream_cb_windows`` pops a window from state the moment it fires,
-    whatever remains in ``(wids, parts)`` IS exactly the set of partial
-    windows. Finalization is pure Catalyst over the slot arrays (the
+    whatever remains in a bucket row's ``(wk, wids, parts)`` IS exactly
+    the set of partial windows; ``explode(arrays_zip(...))`` turns them
+    into one row per window and ``element_at(keys, wk + 1)`` names its
+    key. Finalization is pure Catalyst over the slot arrays (the
     same ``_CB_OPS`` registry layout the processor wrote), so the flush
     is a distributed scan + projection: no replay, no Python, no
     driver-side state walk — it scales with state size, not stream
@@ -1364,13 +1481,13 @@ def flush_cb_partials(
 
     ``on_late`` must match the policy the DRAIN ran with. A
     ``"buffer"`` drain leaves the trailing lateness span of tuples
-    un-folded in (buf_ids, buf_vals); the reference's eosnotify folds
-    those buffered tuples before emitting partials, so the buffered
-    flush first folds the ripe buffer (same last_id dedup + shared
-    ``_make_cb_fold`` kernel as the processor — windows whose last
+    un-folded in (bk, buf_ids, buf_vals); the reference's eosnotify
+    folds those buffered tuples before emitting partials, so the
+    buffered flush first folds the held rows (the processor's own
+    ``_cb_step`` with lateness 0 — windows whose last
     tuple sat in the buffer fire here, they were never emitted by the
     drain) and then finalizes every still-open window. That path runs
-    mapInPandas over the state rows (one per key, no shuffle — still
+    mapInPandas over the state rows (one per bucket, no shuffle — still
     scales with state size); the default drop/assume_ordered path
     stays pure Catalyst over the slot arrays.
     """
@@ -1393,18 +1510,13 @@ def flush_cb_partials(
     ):
         # buffered drains AND user-registered ops without a Catalyst
         # finalizer route through the mapInPandas arm (Python finalize
-        # over one state row per key, no shuffle; drop/assume_ordered
-        # drains leave the buffer empty so only the finalize loop runs)
+        # over one state row per bucket, no shuffle; drop/assume_ordered
+        # drains leave the buffer empty so only the finalize runs)
         return _flush_cb_buffered(st, key, spec, aggs)
-    gs = st.select(
-        F.col(f"key.{key}").alias(key),
-        F.col("value.groupState.wids").alias("wids"),
-        F.col("value.groupState.parts").alias("parts"),
-    )
-    ex = gs.select(
-        key, F.explode(F.arrays_zip("wids", "parts")).alias("z")
+    ex = st.select("value.groupState.*").select(
+        "keys", F.explode(F.arrays_zip("wk", "wids", "parts")).alias("z")
     ).select(
-        key,
+        F.element_at("keys", F.col("z.wk").cast("int") + 1).alias(key),
         F.col("z.wids").alias(GWID),
         F.col("z.parts").alias("_p"),
     )
@@ -1422,45 +1534,28 @@ def flush_cb_partials(
 
 
 def _flush_cb_buffered(st: DataFrame, key: str, spec: WinSpec, aggs: dict) -> DataFrame:
-    """Buffered-drain EOS flush: fold each key's ripe buffered span
-    into its open windows (shared kernel + the processor's exact
-    last_id/dedup rule), then finalize everything left open. One state
-    row per key → mapInPandas, no exchange."""
-    win, slide = spec.win, spec.slide
+    """Buffered-drain EOS flush: fold each bucket's held rows into its
+    open windows (the processor's own ``_cb_step`` with lateness 0, so
+    the same last_id/dedup rule), then finalize everything left open.
+    One state row per bucket → mapInPandas, no exchange."""
     in_cols = sorted({c for _, c in aggs.values() if c is not None})
-    out_cols = ", ".join(f"{n} {_CB_OPS[op][4]}" for n, (op, _c) in aggs.items())
-    out_schema = f"{key} string, gwid long, {out_cols}, win_end long"
-    fold = _make_cb_fold(win, slide, aggs)
-    ops = _cb_ops(aggs)
-    names = [key, "gwid", *aggs.keys(), "win_end"]
-
-    gs = st.select(
-        F.col(f"key.{key}").alias(key),
-        F.col("value.groupState.wids").alias("wids"),
-        F.col("value.groupState.parts").alias("parts"),
-        F.col("value.groupState.last_id").alias("last_id"),
-        F.col("value.groupState.buf_ids").alias("buf_ids"),
-        F.col("value.groupState.buf_vals").alias("buf_vals"),
-    )
+    n_slots, ops, names = _cb_slots(aggs), _cb_ops(aggs), list(aggs)
+    fold = _make_cb_fold(spec.win, spec.slide, aggs)
+    none = np.empty(0, dtype=np.int64)
 
     def flush(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in pdfs:
-            recs = []
             for row in pdf.itertuples(index=False):
-                open_w = {int(w): list(p) for w, p in zip(row.wids, row.parts)}
-                bi = np.asarray(row.buf_ids, dtype=np.int64)
-                order = np.argsort(bi, kind="stable")
-                bv = {c: np.asarray(v, dtype=np.float64)[order]
-                      for c, v in zip(in_cols, row.buf_vals)}
-                bi, bv = _drop_seen(bi[order], bv, row.last_id)
-                fired = fold(bi, bv, open_w) if len(bi) else []
-                for w, part in sorted(open_w.items()):
-                    fired.append((w, *_cb_finalize(ops, part), w * slide + win - 1))
-                recs += [(getattr(row, key), *r) for r in sorted(fired)]
-            if recs:
-                yield pd.DataFrame(recs, columns=names)
+                s = _CBState.load(tuple(row), n_slots, len(in_cols))
+                s, (fk, fw, fp) = _cb_step(
+                    s, none, none, {c: np.empty(0) for c in in_cols}, fold, "buffer", 0
+                )
+                done = (np.concatenate([fk, s.wk]), np.concatenate([fw, s.wid]),
+                        np.concatenate([fp, s.parts]))
+                if len(done[0]):
+                    yield _cb_frame(s.keys, done, ops, names, key, spec)
 
-    return gs.mapInPandas(flush, out_schema)
+    return st.select("value.groupState.*").mapInPandas(flush, _cb_out_schema(key, aggs))
 
 
 #: Catalyst aggregation-buffer layout per declared op (slots appear in
@@ -1679,33 +1774,40 @@ def stream_accumulate(
 ) -> DataFrame:
     """Streaming Accumulator: keyed rolling reduce emitting the running
     (sum, count) after EVERY input tuple (reference
-    includes/accumulator.hpp:157-192, emit at :181) via a keyed
-    stateful processor. Requires per-key-ordered arrival (same contract
-    as stream_cb_windows); within a micro-batch each key's rows are
-    sorted by id once, across all of its Arrow chunks."""
+    includes/accumulator.hpp:157-192, emit at :181) via the key-group
+    stateful processor of stream_cb_windows: one Python call per hash
+    bucket per micro-batch, one state row per bucket holding each key's
+    (s, c). Requires per-key-ordered arrival (same contract as
+    stream_cb_windows); within a micro-batch each key's rows are sorted
+    by id once, across all of its Arrow chunks."""
     out_schema = f"{key} string, {id_col} long, running_sum double, running_cnt long"
-    state_schema = "s double, c long"
+    state_schema = "keys array<string>, s array<double>, c array<long>"
 
     def proc(
-        k: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+        _bk: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        ids, vals = _key_rows(pdfs, id_col, [value_col])
+        known, s0, c0 = state.get if state.exists else ([], [], [])
+        keys, kid, ids, vals = _bucket_rows(
+            pdfs, key, id_col, [value_col], np.asarray(known, dtype=object)
+        )
         if not len(ids):
             return
-        s, c = state.get if state.exists else (0.0, 0)
-        run_s = s + np.cumsum(vals[value_col])
-        run_c = c + np.arange(1, len(ids) + 1, dtype=np.int64)
-        state.update((float(run_s[-1]), int(run_c[-1])))
+        fresh = len(keys) - len(known)
+        s = np.concatenate([np.asarray(s0, dtype=np.float64), np.zeros(fresh)])
+        c = np.concatenate([np.asarray(c0, dtype=np.int64), np.zeros(fresh, dtype=np.int64)])
+        # per-key running sums in id order (a segmented cumsum)
+        g = pd.Series(vals[value_col]).groupby(kid, sort=False)
+        run_s = s[kid] + g.cumsum().to_numpy()
+        run_c = c[kid] + g.cumcount().to_numpy() + 1
+        ends = _run_ends(kid)
+        s[kid[ends]], c[kid[ends]] = run_s[ends], run_c[ends]
+        state.update((keys.tolist(), s.tolist(), c.tolist()))
         yield pd.DataFrame(
-            {key: k[0], id_col: ids, "running_sum": run_s, "running_cnt": run_c}
+            {key: keys[kid], id_col: ids, "running_sum": run_s, "running_cnt": run_c}
         )
 
-    return (
-        df.select(*dict.fromkeys([key, id_col, value_col]))
-        .groupBy(key)
-        .applyInPandasWithState(
-            proc, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
+    return _key_groups(df, key, [id_col, value_col]).applyInPandasWithState(
+        proc, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
 
 
