@@ -836,6 +836,79 @@ def test_stream_cb_key_groups_equal_batch(spark, tdir, monkeypatch, on_late):
     assert spark.read.format("statestore").option("path", ckpt).load().count() <= 3
 
 
+def _null_key_turns(path, vals=None):
+    """Keys k0, k1 and a null key, 20 turns each, one parquet file per
+    half of the turns; the second file holds the null key's rows only
+    (as its own micro-batch under max_files_per_trigger=1, it hands a
+    bucket nothing but null keys). ``vals`` overrides the value column."""
+    conv = np.repeat(np.array(["k0", "k1", None], dtype=object), 20)
+    turn = np.tile(np.arange(20, dtype=np.int64), 3)
+    pdf = pd.DataFrame({
+        "conv_id": conv, "turn_idx": turn,
+        "v": vals if vals is not None else ((turn * 7) % 11).astype(np.float64),
+    })
+    os.makedirs(path, exist_ok=True)
+    late = (pdf["turn_idx"] >= 10) & pdf["conv_id"].isna()
+    typed = pdf.astype({"conv_id": "string"})  # an all-null file stays string
+    datagen.write_parquet_us(typed[~late], f"{path}/part-0.parquet")
+    datagen.write_parquet_us(typed[late], f"{path}/part-1.parquet")
+    return pdf
+
+
+@pytest.mark.parametrize("on_late", ["drop", "buffer"])
+def test_stream_cb_null_key_equals_batch(spark, tdir, monkeypatch, on_late):
+    """A null key is a key of its own, as under the batch groupBy: with
+    one bucket, null-key rows share it with k0 and k1 in the first
+    micro-batch and have it to themselves in the second, and fired ∪
+    flushed == the batch win_seq result."""
+    monkeypatch.setattr(se, "_KEY_BUCKETS", 1)
+    path = str(tdir / f"null_key_src_{on_late}")
+    _null_key_turns(path)
+    spec = WinSpec("cb", 4, 3)
+    src = se.stream_source(spark, path, spark.read.parquet(path).schema,
+                           max_files_per_trigger=1)
+    stream = se.stream_cb_windows(src, "conv_id", "turn_idx", None, spec,
+                                  on_late=on_late, aggs=_KG_AGGS,
+                                  lateness=2 if on_late == "buffer" else 0)
+    sink = str(tdir / f"null_key_sink_{on_late}")
+    ckpt = str(tdir / f"null_key_ckpt_{on_late}")
+    se.run_available_now(stream, sink, ckpt, timeout_sec=300)
+    flushed = se.flush_cb_partials(spark, ckpt, "conv_id", spec, aggs=_KG_AGGS,
+                                   on_late=on_late)
+    got = spark.read.parquet(sink).unionByName(flushed).toPandas()
+    want = _kg_batch_want(spark, path, spec)
+    cols = ["conv_id", "gwid", "s", "c", "am", "win_end"]
+    assert len(want) == 3 * 7 and want["conv_id"].isna().sum() == 7
+    assert_frames_equal(got[cols], want[cols], ["conv_id", "gwid"])
+
+
+@pytest.mark.parametrize("files_per_trigger", [1, 2])
+def test_stream_accumulate_null_key_and_value(spark, tdir, monkeypatch,
+                                              files_per_trigger):
+    """The accumulator keeps a null key apart from the keys it shares a
+    bucket with, and a null value makes its key's running sum NaN from
+    there on (the count still counts it) — the same output whether the
+    input is drained as one micro-batch or as two. k0's null is its
+    last row of the first file, so under two batches it is carried in
+    state."""
+    monkeypatch.setattr(se, "_KEY_BUCKETS", 1)
+    path = str(tdir / f"null_acc_src_{files_per_trigger}")
+    vals = np.arange(60, dtype=np.float64)
+    vals[9] = vals[24] = np.nan  # k0 turn 9, k1 turn 4
+    pdf = _null_key_turns(path, vals)
+    src = se.stream_source(spark, path, spark.read.parquet(path).schema,
+                           max_files_per_trigger=files_per_trigger)
+    stream = se.stream_accumulate(src, "conv_id", "turn_idx", "v")
+    got = se.run_to_memory(stream, f"t_acc_null_{files_per_trigger}", spark,
+                           output_mode="append").toPandas()
+    g = pdf.groupby("conv_id", dropna=False, sort=False)["v"]
+    want = pdf[["conv_id", "turn_idx"]].assign(
+        running_sum=g.cumsum(skipna=False), running_cnt=g.cumcount() + 1
+    )
+    assert want["running_sum"].isna().sum() == 11 + 16
+    assert_frames_equal(got, want, ["conv_id", "turn_idx"])
+
+
 def test_stream_cb_resume_under_other_shuffle_partitions(spark, tdir):
     """The bucket count is a constant of the plan, not the live
     shuffle-partition setting: a drain resumed from its checkpoint after

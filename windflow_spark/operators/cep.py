@@ -94,13 +94,16 @@ def match_events(
 
     ``order_by``: optional window-ordering columns that MUST induce
     the same per-key total order as ``id_col`` (e.g. the columns the
-    id was renumbered from — the cb_ids/TS_RENUMBERING inputs). When
+    id was renumbered from — the cb_ids/TS_RENUMBERING inputs); results
+    are identical by the order-isomorphism contract — the engine
+    trusts the caller here, exactly like the dense-id contract. When
     the upstream pipeline already sorted by exactly these attributes,
     EnsureRequirements recognizes the ordering and skips the re-sort
-    by id that the matcher's windows would otherwise insert (measured
-    ~10% of cep query time at sf1.0; results are identical by the
-    order-isomorphism contract — the engine trusts the caller here,
-    exactly like the dense-id contract).
+    that an ascending window would otherwise insert. That spares the
+    sort of strict mode and of Kleene's forward windows only: skip
+    mode's windows, and Kleene's later-row mins, run over the reversed
+    (``_backward``) order, which an ascending upstream never satisfies,
+    so they keep their sort.
     """
     keys = [keys] if isinstance(keys, str) else list(keys)
     k = len(steps)

@@ -763,14 +763,17 @@ def _bucket_rows(pdfs: Iterator[pd.DataFrame], key: str, id_col: str,
             [p[c].to_numpy(dtype=dtype) for p in chunks] or [np.empty(0, dtype=dtype)]
         )
 
-    codes, uniq = pd.factorize(col(key, object))
-    idx = pd.Index(known).get_indexer(uniq)
-    new = idx < 0
-    idx[new] = len(known) + np.arange(int(new.sum()))
-    kid, ids = idx[codes], col(id_col, np.int64)
+    # known first: its keys are distinct, so they keep codes 0..n-1 and
+    # a new key gets the next code; a null key is a key of its own, as
+    # under groupBy (no NA sentinel, which would index keys[-1])
+    codes, keys = pd.factorize(
+        np.concatenate([known, col(key, object)]), use_na_sentinel=False
+    )
+    keys = keys.astype(object)
+    keys[pd.isna(keys)] = None
+    kid, ids = codes[len(known):], col(id_col, np.int64)
     order = np.lexsort((ids, kid))
-    return (np.concatenate([known, uniq[new]]), kid[order], ids[order],
-            {c: col(c, np.float64)[order] for c in cols})
+    return keys, kid[order], ids[order], {c: col(c, np.float64)[order] for c in cols}
 
 
 #: one state row per bucket: every key with its last folded id; the
@@ -849,8 +852,9 @@ def _cb_frame(keys, windows: tuple, ops: list, names: list[str], key: str,
     """Finalized output rows of ``windows`` = (key index, wid, slot
     rows), sorted by (key, gwid)."""
     wk, wid, parts = windows
-    rank = np.empty(len(keys), dtype=np.int64)
-    rank[np.argsort(keys, kind="stable")] = np.arange(len(keys))
+    # null-safe key rank (np.argsort cannot compare None with a str);
+    # the keys are distinct, so the sorted codes are their ranks
+    rank = pd.factorize(keys, sort=True, use_na_sentinel=False)[0]
     order = np.lexsort((wid, rank[wk]))
     wk, wid, parts = wk[order], wid[order], parts[order]
     return pd.DataFrame({
@@ -1795,9 +1799,11 @@ def stream_accumulate(
         fresh = len(keys) - len(known)
         s = np.concatenate([np.asarray(s0, dtype=np.float64), np.zeros(fresh)])
         c = np.concatenate([np.asarray(c0, dtype=np.int64), np.zeros(fresh, dtype=np.int64)])
-        # per-key running sums in id order (a segmented cumsum)
+        # per-key running sums in id order (a segmented cumsum); a null
+        # value makes its key's sum NaN from there on, across batches
+        # too (the NaN is carried in state), as np.cumsum over the key
         g = pd.Series(vals[value_col]).groupby(kid, sort=False)
-        run_s = s[kid] + g.cumsum().to_numpy()
+        run_s = s[kid] + g.cumsum(skipna=False).to_numpy()
         run_c = c[kid] + g.cumcount().to_numpy() + 1
         ends = _run_ends(kid)
         s[kid[ends]], c[kid[ends]] = run_s[ends], run_c[ends]
