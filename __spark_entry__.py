@@ -1171,7 +1171,7 @@ def q_cep_pattern(spark, sf_dir):
 
 def q_streaming_cep(spark, sf_dir):
     """The same pattern through the STREAMING stateful matcher
-    (bounded carry: state = last k-1 rows per key); a completed match
+    (bounded state: at most k-1 pending partials per key); a completed match
     emits exactly once, so fired == the batch matcher == the same
     oracle — no flush arm exists or is needed (a sequence either
     completed or it didn't, unlike windows' eosnotify partials)."""

@@ -1,8 +1,10 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -36,6 +38,40 @@ def tb_grid() -> pd.DataFrame:
 @pytest.fixture(scope="session")
 def transcripts() -> pd.DataFrame:
     return datagen.gen_transcripts(n_convs=30, seed=42, mean_turns=24)
+
+
+@pytest.fixture(scope="module")
+def tdir(tmp_path_factory, request):
+    """A scratch directory per test module."""
+    return tmp_path_factory.mktemp(request.module.__name__.rsplit(".", 1)[-1])
+
+
+@pytest.fixture
+def multi_chunk_batch(spark, tdir):
+    """One micro-batch of four files whose sizes grow with ts, each
+    key's turns spread over all of them, read back in Arrow chunks of 50
+    rows. Spark plans the files largest first, so every key reaches
+    its stateful processor as several chunks out of id order."""
+    keys, turns = 4, 300
+    turn = np.tile(np.arange(turns, dtype=np.int64), keys)
+    conv = np.repeat(np.arange(keys), turns)
+    pdf = pd.DataFrame({
+        "conv_id": [f"k{c}" for c in conv],
+        "turn_idx": turn,
+        "v": ((turn * 7 + conv * 3) % 11).astype(np.float64),
+        "text": "pad",  # a column no processor reads
+    }).sort_values(["turn_idx", "conv_id"], kind="stable")
+    path = str(tdir / "multi_chunk_src")
+    os.makedirs(path, exist_ok=True)
+    for k, (a, b) in enumerate([(0, 100), (100, 300), (300, 600), (600, 1200)]):
+        datagen.write_parquet_us(pdf.iloc[a:b], f"{path}/part-{k}.parquet")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "50")
+    try:
+        yield path
+    finally:
+        spark.conf.set(conf, old)
 
 
 def assert_frames_equal(got: pd.DataFrame, want: pd.DataFrame, sort_by: list[str]):

@@ -20,11 +20,6 @@ from windflow_spark.operators import cep
 from windflow_spark.streaming import engine as se
 
 
-@pytest.fixture(scope="module")
-def tdir(tmp_path_factory):
-    return tmp_path_factory.mktemp("cep")
-
-
 def _df(spark, rows, cols=("k", "i", "ev", "us")):
     return spark.createDataFrame(pd.DataFrame(rows, columns=list(cols)))
 
@@ -390,6 +385,70 @@ def test_stream_match_long_key_schema(spark, tdir):
     got = se.run_to_memory(out, "t_cep_longk", spark, output_mode="append").toPandas()
     assert got.dtypes["k"].kind == "i", got.dtypes
     assert sorted(map(tuple, got[["k", "start_id"]].to_numpy())) == [(7, 0), (9, 0)]
+
+
+#: step predicates (SQL) and options per mode
+_MULTI_CHUNK_MODES = {
+    "strict": (["v < 6", "v >= 3", "v < 8"], {}),
+    "skip": (["v < 2", "v = 5", "v > 8"], {"mode": "skip", "within": 30}),
+    "kleene": (["v < 4", "v >= 4", "v < 4"], {"quantifiers": "1+1"}),
+}
+
+
+@pytest.mark.parametrize("mode", list(_MULTI_CHUNK_MODES))
+def test_stream_match_multi_chunk_batch_equals_batch(spark, multi_chunk_batch, mode):
+    """Regression: a key whose rows reach the matcher as several Arrow
+    chunks out of id order in one micro-batch must not lose matches to
+    the drop rule — the processor sorts each key's rows once per batch
+    and runs its kernel once, in every mode."""
+    path = multi_chunk_batch
+    preds, kw = _MULTI_CHUNK_MODES[mode]
+    steps = [F.expr(p) for p in preds]
+
+    def with_ts(df):
+        return df.withColumn("us", F.col("turn_idx").cast("long"))
+
+    want = cep.match_events(
+        with_ts(spark.read.parquet(path)), "conv_id", "turn_idx", steps, ts_col="us", **kw
+    ).toPandas()
+    src = se.stream_source(spark, path, spark.read.parquet(path).schema)
+    out = se.stream_match_events(with_ts(src), "conv_id", "turn_idx", steps,
+                                 ts_col="us", **kw)
+    got = se.run_to_memory(out, f"t_cep_chunks_{mode}", spark,
+                           output_mode="append").toPandas()
+    assert len(want) > 100
+    assert_frames_equal(got, want, ["conv_id", "start_id"])
+
+
+def test_stream_match_strict_within_ts_not_monotone(spark, tdir):
+    """Strict mode needs no ts order: ``within`` only filters completed
+    matches (ts_last − ts_first), so a partial is not expired when a
+    later row's ts runs past its span. Key a's match 0-2 crosses the
+    batch boundary after a row whose ts is 90 s past its start yet ends
+    2 s after it; key b's match spans 40 s and is filtered, as in
+    batch."""
+    pdf = pd.DataFrame({
+        "k": ["a"] * 5 + ["b"] * 3,
+        "i": [0, 1, 2, 3, 4, 0, 1, 2],
+        "ev": ["A", "B", "C", "A", "B", "A", "B", "C"],
+        "us": [10, 100, 12, 13, 14, 0, 1, 40],
+    }).assign(us=lambda d: d["us"] * 1_000_000)
+    path = str(tdir / "strict_within_ts")
+    os.makedirs(path, exist_ok=True)
+    # batch 1 ends on a's B (ts 100 s) and b's B; the C rows come next
+    datagen.write_parquet_us(pdf[pdf["i"] < 2], f"{path}/part-0.parquet")
+    datagen.write_parquet_us(pdf[pdf["i"] >= 2], f"{path}/part-1.parquet")
+    steps = [F.col("ev") == "A", F.col("ev") == "B", F.col("ev") == "C"]
+    within = 5_000_000
+    want = cep.match_events(
+        spark.read.parquet(path), "k", "i", steps, ts_col="us", within=within
+    ).toPandas()
+    assert sorted(map(tuple, want[["k", "start_id", "end_id"]].to_numpy())) == [("a", 0, 2)]
+    src = se.stream_source(spark, path, spark.read.parquet(path).schema,
+                           max_files_per_trigger=1)
+    out = se.stream_match_events(src, "k", "i", steps, ts_col="us", within=within)
+    got = se.run_to_memory(out, "t_cep_strict_ts", spark, output_mode="append").toPandas()
+    assert_frames_equal(got, want, ["k", "start_id"])
 
 
 # ---- Kleene-plus quantifiers (strict mode) --------------------------

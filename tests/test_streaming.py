@@ -19,11 +19,6 @@ from windflow_spark.streaming import engine as se
 
 
 @pytest.fixture(scope="module")
-def tdir(tmp_path_factory):
-    return tmp_path_factory.mktemp("stream")
-
-
-@pytest.fixture(scope="module")
 def tx_path(spark, tdir):
     """Transcripts written as several files (per-conv order preserved:
     each conversation lives in exactly one file)."""
@@ -697,34 +692,6 @@ def test_stream_cb_eos_flush_restores_batch_parity(spark, tx_path, tdir):
     assert_frames_equal(got[cols], want[cols], ["conv_id", "gwid"])
 
 
-@pytest.fixture
-def multi_chunk_batch(spark, tdir):
-    """One micro-batch of four files whose sizes grow with ts, each
-    key's turns spread over all of them, read back in Arrow chunks of 50
-    rows. Spark plans the files largest first, so every key reaches
-    its stateful processor as several chunks out of id order."""
-    keys, turns = 4, 300
-    turn = np.tile(np.arange(turns, dtype=np.int64), keys)
-    conv = np.repeat(np.arange(keys), turns)
-    pdf = pd.DataFrame({
-        "conv_id": [f"k{c}" for c in conv],
-        "turn_idx": turn,
-        "v": ((turn * 7 + conv * 3) % 11).astype(np.float64),
-        "text": "pad",  # a column no processor reads
-    }).sort_values(["turn_idx", "conv_id"], kind="stable")
-    path = str(tdir / "multi_chunk_src")
-    os.makedirs(path, exist_ok=True)
-    for k, (a, b) in enumerate([(0, 100), (100, 300), (300, 600), (600, 1200)]):
-        datagen.write_parquet_us(pdf.iloc[a:b], f"{path}/part-{k}.parquet")
-    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(conf)
-    spark.conf.set(conf, "50")
-    try:
-        yield path
-    finally:
-        spark.conf.set(conf, old)
-
-
 def test_stream_cb_multi_chunk_batch_equals_batch(spark, tdir, multi_chunk_batch):
     """Regression: a key whose rows straddle Arrow chunks out of id
     order in one micro-batch must not lose rows to the drop rule — the
@@ -886,26 +853,88 @@ def test_stream_cb_null_key_equals_batch(spark, tdir, monkeypatch, on_late):
 def test_stream_accumulate_null_key_and_value(spark, tdir, monkeypatch,
                                               files_per_trigger):
     """The accumulator keeps a null key apart from the keys it shares a
-    bucket with, and a null value makes its key's running sum NaN from
-    there on (the count still counts it) — the same output whether the
-    input is drained as one micro-batch or as two. k0's null is its
-    last row of the first file, so under two batches it is carried in
-    state."""
+    bucket with and treats a null value as batch ``accumulate``'s SQL
+    ``sum`` does: running_sum skips it and is null until the key's first
+    non-null value, running_cnt counts it — the same output whether the
+    input is drained as one micro-batch or as two. k0's null is its last
+    row of the first file, and the null key's first ten values (the
+    whole first file) are null, so under two batches both are carried
+    in state."""
+    from windflow_spark.operators.core import accumulate
+
     monkeypatch.setattr(se, "_KEY_BUCKETS", 1)
     path = str(tdir / f"null_acc_src_{files_per_trigger}")
     vals = np.arange(60, dtype=np.float64)
     vals[9] = vals[24] = np.nan  # k0 turn 9, k1 turn 4
-    pdf = _null_key_turns(path, vals)
+    vals[40:50] = np.nan  # null key, turns 0-9
+    _null_key_turns(path, vals)
     src = se.stream_source(spark, path, spark.read.parquet(path).schema,
                            max_files_per_trigger=files_per_trigger)
     stream = se.stream_accumulate(src, "conv_id", "turn_idx", "v")
     got = se.run_to_memory(stream, f"t_acc_null_{files_per_trigger}", spark,
                            output_mode="append").toPandas()
-    g = pdf.groupby("conv_id", dropna=False, sort=False)["v"]
-    want = pdf[["conv_id", "turn_idx"]].assign(
-        running_sum=g.cumsum(skipna=False), running_cnt=g.cumcount() + 1
-    )
-    assert want["running_sum"].isna().sum() == 11 + 16
+    want = accumulate(
+        spark.read.parquet(path), ["conv_id"], ["turn_idx"],
+        {"running_sum": F.sum("v"), "running_cnt": F.count(F.lit(1))},
+    ).select("conv_id", "turn_idx", "running_sum", "running_cnt").toPandas()
+    assert want["running_sum"].isna().sum() == 10
+    assert_frames_equal(got, want, ["conv_id", "turn_idx"])
+
+
+def _long_key_turns(path):
+    """Keys 7, 8 and 2**40 (a ``long`` key column), 20 turns each, one
+    parquet file per half of the turns."""
+    turn = np.tile(np.arange(20, dtype=np.int64), 3)
+    pdf = pd.DataFrame({
+        "conv_id": np.repeat(np.array([7, 8, 2**40], dtype=np.int64), 20),
+        "turn_idx": turn,
+        "v": ((turn * 7) % 11).astype(np.float64),
+    })
+    os.makedirs(path, exist_ok=True)
+    datagen.write_parquet_us(pdf[turn < 10], f"{path}/part-0.parquet")
+    datagen.write_parquet_us(pdf[turn >= 10], f"{path}/part-1.parquet")
+
+
+@pytest.mark.parametrize("on_late", ["drop", "buffer"])
+def test_stream_cb_long_key_equals_batch(spark, tdir, on_late):
+    """A non-string key flows through the CB processor, its state and
+    both EOS flush arms: fired ∪ flushed == the batch win_seq result,
+    with the key still a long."""
+    path = str(tdir / f"long_key_src_{on_late}")
+    _long_key_turns(path)
+    spec = WinSpec("cb", 4, 3)
+    src = se.stream_source(spark, path, spark.read.parquet(path).schema,
+                           max_files_per_trigger=1)
+    stream = se.stream_cb_windows(src, "conv_id", "turn_idx", None, spec,
+                                  on_late=on_late, aggs=_KG_AGGS,
+                                  lateness=2 if on_late == "buffer" else 0)
+    sink = str(tdir / f"long_key_sink_{on_late}")
+    ckpt = str(tdir / f"long_key_ckpt_{on_late}")
+    se.run_available_now(stream, sink, ckpt, timeout_sec=300)
+    flushed = se.flush_cb_partials(spark, ckpt, "conv_id", spec, aggs=_KG_AGGS,
+                                   on_late=on_late)
+    got = spark.read.parquet(sink).unionByName(flushed).toPandas()
+    want = _kg_batch_want(spark, path, spec)
+    cols = ["conv_id", "gwid", "s", "c", "am", "win_end"]
+    assert len(want) == 3 * 7 and got.dtypes["conv_id"].kind == "i"
+    assert_frames_equal(got[cols], want[cols], ["conv_id", "gwid"])
+
+
+def test_stream_accumulate_long_key_equals_batch(spark, tdir):
+    """A non-string key through the accumulator == batch accumulate."""
+    from windflow_spark.operators.core import accumulate
+
+    path = str(tdir / "long_key_acc_src")
+    _long_key_turns(path)
+    src = se.stream_source(spark, path, spark.read.parquet(path).schema,
+                           max_files_per_trigger=1)
+    stream = se.stream_accumulate(src, "conv_id", "turn_idx", "v")
+    got = se.run_to_memory(stream, "t_acc_long_key", spark, output_mode="append").toPandas()
+    want = accumulate(
+        spark.read.parquet(path), ["conv_id"], ["turn_idx"],
+        {"running_sum": F.sum("v"), "running_cnt": F.count(F.lit(1))},
+    ).select("conv_id", "turn_idx", "running_sum", "running_cnt").toPandas()
+    assert len(got) == 60 and got.dtypes["conv_id"].kind == "i"
     assert_frames_equal(got, want, ["conv_id", "turn_idx"])
 
 

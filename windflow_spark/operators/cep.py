@@ -12,11 +12,14 @@ matches — expressed Spark-first.
   projections + (k-1) leads + one id-contiguity lead; Catalyst folds it
   into a single Window node.
 - Streaming (`windflow_spark.streaming.engine.stream_match_events`):
-  bounded-carry stateful processor — state is exactly the last k-1 rows
-  per key (ids + step flags + ts), so state size is O(keys × k), never
-  O(stream). A match emits exactly once, when its completing row
-  arrives; there are no partial matches to flush at EOS (a sequence
-  either completed or it didn't).
+  one per-key stateful processor for every mode. Each micro-batch sorts
+  a key's rows once by id, drops ids it has already passed, and runs a
+  numpy kernel once (strict mode is the all-'1' case of the contiguity
+  kernel). State is the key's pending partial matches plus its last
+  (id, ts): at most k-1 partials per key in strict mode, O(active
+  partials) with a `+` or in skip mode, never O(stream). A match emits
+  exactly once, when its completing row arrives; there are no partial
+  matches to flush at EOS (a sequence either completed or it didn't).
 
 Contract: ``id_col`` is a per-key DENSE monotone integer id (the
 TS_RENUMBERING contract the CB operators already use — cb_ids /
@@ -27,8 +30,8 @@ makes gaps unmatched (strictness), it does not crash.
 
 100 TB posture: batch is one hash-partition shuffle on the key + a
 sorted window scan (the same shape as any keyed window agg; skew =
-hot keys, same salting story as Key_Farm); streaming state is k-1
-rows/key regardless of stream length.
+hot keys, same salting story as Key_Farm); streaming state in strict
+mode is at most k-1 partials per key regardless of stream length.
 """
 
 from __future__ import annotations

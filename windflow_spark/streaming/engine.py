@@ -30,6 +30,7 @@ from __future__ import annotations
 import json
 import math
 from collections.abc import Iterator, Sequence
+from functools import partial
 from typing import NamedTuple
 
 import numpy as np
@@ -740,6 +741,13 @@ def _make_cb_fold(win: int, slide: int, aggs: dict):
 _KEY_BUCKETS = 128
 
 
+def _key_ddl(df: DataFrame, key: str) -> str:
+    """The DDL type of ``df``'s key column, for the output and state
+    schemas of the stateful processors: a key of any type, not only a
+    string."""
+    return df.schema[key].dataType.simpleString()
+
+
 def _key_groups(df: DataFrame, key: str, cols: list[str]):
     """``df`` projected to (key, cols) and grouped by the key's bucket."""
     return (
@@ -750,12 +758,13 @@ def _key_groups(df: DataFrame, key: str, cols: list[str]):
 
 
 def _bucket_rows(pdfs: Iterator[pd.DataFrame], key: str, id_col: str,
-                 cols: list[str], known: "np.ndarray"):
-    """A bucket's rows of one micro-batch, gathered across all of its
+                 cols: dict, known: "np.ndarray"):
+    """A group's rows of one micro-batch, gathered across all of its
     Arrow chunks and sorted ONCE by (key, id) — a multi-file micro-batch
-    hands the chunks over in any id order. Returns ``(keys, kid, ids,
-    vals)``: ``keys`` is ``known`` (the bucket's keys from state)
-    followed by the keys first seen here, ``kid`` indexes it per row."""
+    hands the chunks over in any id order. ``cols`` maps each further
+    column to its numpy dtype. Returns ``(keys, kid, ids, vals)``:
+    ``keys`` is ``known`` (the bucket's keys from state) followed by the
+    keys first seen here, ``kid`` indexes it per row."""
     chunks = [p for p in pdfs if len(p)]
 
     def col(c, dtype):
@@ -773,21 +782,37 @@ def _bucket_rows(pdfs: Iterator[pd.DataFrame], key: str, id_col: str,
     keys[pd.isna(keys)] = None
     kid, ids = codes[len(known):], col(id_col, np.int64)
     order = np.lexsort((ids, kid))
-    return keys, kid[order], ids[order], {c: col(c, np.float64)[order] for c in cols}
+    return keys, kid[order], ids[order], {c: col(c, t)[order] for c, t in cols.items()}
 
 
-#: one state row per bucket: every key with its last folded id; the
-#: open windows as (key index, wid, slot row); the ``buffer`` policy's
-#: held rows as (key index, id) plus one value array per fold column
-_CB_STATE = (
-    "keys array<string>, last_ids array<long>, wk array<long>, "
-    "wids array<long>, parts array<array<double>>, bk array<long>, "
-    "buf_ids array<long>, buf_vals array<array<double>>"
-)
+def _drop_seen(kid, ids, last):
+    """The reference's drop rule per key (win_seq.hpp:289-305) over rows
+    sorted by (key index ``kid``, id): a row is kept when its id is
+    above its key's last folded id in ``last`` and is not a repeat
+    (first occurrence wins). Returns the keep mask and ``last``
+    advanced to each key's largest kept id."""
+    keep = ids > last[kid]
+    keep[1:] &= (ids[1:] != ids[:-1]) | (kid[1:] != kid[:-1])
+    kid, ids = kid[keep], ids[keep]
+    ends = _run_ends(kid)
+    last = last.copy()
+    last[kid[ends]] = ids[ends]
+    return keep, last
+
+
+def _cb_state_schema(key_ddl: str) -> str:
+    """One state row per bucket: every key with its last folded id; the
+    open windows as (key index, wid, slot row); the ``buffer`` policy's
+    held rows as (key index, id) plus one value array per fold column."""
+    return (
+        f"keys array<{key_ddl}>, last_ids array<long>, wk array<long>, "
+        "wids array<long>, parts array<array<double>>, bk array<long>, "
+        "buf_ids array<long>, buf_vals array<array<double>>"
+    )
 
 
 class _CBState(NamedTuple):
-    """One bucket's CB state as numpy arrays (fields as ``_CB_STATE``)."""
+    """One bucket's CB state as numpy arrays (fields as ``_cb_state_schema``)."""
 
     keys: "np.ndarray"
     last: "np.ndarray"
@@ -834,14 +859,8 @@ def _cb_step(st: _CBState, kid, ids, vals: dict, fold, on_late: str,
         ).reshape(len(cols), int(held.sum())))
         kid, ids, vals = kid[ripe], ids[ripe], {c: v[ripe] for c, v in vals.items()}
     if on_late != "assume_ordered":
-        # the reference's drop rule, per key: ids at or below the key's
-        # last folded one, and repeated ids (first occurrence wins)
-        keep = ids > st.last[kid]
-        keep[1:] &= (ids[1:] != ids[:-1]) | (kid[1:] != kid[:-1])
+        keep, last = _drop_seen(kid, ids, st.last)
         kid, ids, vals = kid[keep], ids[keep], {c: v[keep] for c, v in vals.items()}
-        ends = _run_ends(kid)
-        last = st.last.copy()
-        last[kid[ends]] = ids[ends]
         st = st._replace(last=last)
     (wk, wid, parts), fired = fold(kid, ids, vals, (st.wk, st.wid, st.parts))
     return st._replace(wk=wk, wid=wid, parts=parts), fired
@@ -863,9 +882,9 @@ def _cb_frame(keys, windows: tuple, ops: list, names: list[str], key: str,
     })
 
 
-def _cb_out_schema(key: str, aggs: dict) -> str:
+def _cb_out_schema(key: str, key_ddl: str, aggs: dict) -> str:
     out_cols = ", ".join(f"{n} {_CB_OPS[op][4]}" for n, (op, _c) in aggs.items())
-    return f"{key} string, gwid long, {out_cols}, win_end long"
+    return f"{key} {key_ddl}, gwid long, {out_cols}, win_end long"
 
 
 def stream_cb_windows(
@@ -915,9 +934,9 @@ def stream_cb_windows(
       (single-writer sources); cheapest, silently wrong under disorder.
     Within a micro-batch, a key's rows are always processed in id order.
 
-    State is one row per bucket (``_CB_STATE``): at most
+    State is one row per bucket (``_cb_state_schema``): at most
     ``_KEY_BUCKETS`` rows, each holding its keys' last ids, open
-    windows and held rows.
+    windows and held rows. The key may be of any type.
     """
     if on_late not in ("assume_ordered", "drop", "buffer"):
         raise ValueError(f"unknown on_late policy {on_late!r}")
@@ -937,7 +956,9 @@ def stream_cb_windows(
         _bk: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         st = _CBState.load(state.get if state.exists else None, n_slots, len(in_cols))
-        keys, kid, ids, vals = _bucket_rows(pdfs, key, id_col, in_cols, st.keys)
+        keys, kid, ids, vals = _bucket_rows(
+            pdfs, key, id_col, dict.fromkeys(in_cols, np.float64), st.keys
+        )
         st = st._replace(keys=keys, last=np.concatenate(
             [st.last, np.full(len(keys) - len(st.keys), -1, dtype=np.int64)]))
         st, fired = _cb_step(st, kid, ids, vals, fold, on_late, lateness)
@@ -945,10 +966,187 @@ def stream_cb_windows(
         if len(fired[0]):
             yield _cb_frame(keys, fired, ops, names, key, spec)
 
+    key_ddl = _key_ddl(df, key)
     return _key_groups(df, key, [id_col, *in_cols]).applyInPandasWithState(
-        proc, _cb_out_schema(key, aggs), _CB_STATE, "append",
-        GroupStateTimeout.NoTimeout,
+        proc, _cb_out_schema(key, key_ddl, aggs), _cb_state_schema(key_ddl),
+        "append", GroupStateTimeout.NoTimeout,
     )
+
+
+#: state of ``stream_match_events``, one row per key: its pending
+#: partial matches, one entry each — start id, ts of the start row, step
+#: and whether it is inside the run of a ``+`` step (skip leaves it
+#: False) — and the key's last seen (id, ts)
+_CEP_STATE = (
+    "sid array<long>, tsf array<long>, stp array<int>, "
+    "run array<boolean>, last_id long, last_ts long"
+)
+
+
+def _skip_kernel(pending, last_id, last_ts, ids, fl, ts, *, within: int):
+    """skip-till-next-match over one key's new rows of a micro-batch
+    (sorted by id, drop rule applied; ``fl`` is the rows × steps flag
+    matrix). A pending partial (start_id, ts_first, step awaited) binds
+    each step to the EARLIEST later satisfying row, so every partial at
+    step j binds to the SAME next step-j row and whole cohorts advance
+    with chained ``searchsorted`` over the step-position arrays — no
+    per-row Python. A completion whose span exceeds ``within`` is
+    discarded outright (the earliest completion is minimal, so no later
+    one can satisfy the bound), and a partial expires once the last
+    seen ts outruns its span. Returns the pending partials and the
+    matches as (start_id, end_id, ts_first, ts_last)."""
+    p_sid, p_tsf, p_stp, _run = pending
+    k = fl.shape[1]
+    pos = [np.flatnonzero(fl[:, j]) for j in range(k)]
+    # pending partials bind anywhere in this batch (their rows are
+    # strictly before it); new starts bind strictly after their own row
+    cur_pos = np.concatenate([np.full(len(p_sid), -1, dtype=np.int64), pos[0]])
+    cur_stp = np.concatenate([p_stp, np.ones(len(pos[0]), dtype=np.int64)])
+    sid = np.concatenate([p_sid, ids[pos[0]]])
+    tsf = np.concatenate([p_tsf, ts[pos[0]]])
+    for j in range(1, k):
+        m = cur_stp == j
+        if not m.any() or not len(pos[j]):
+            continue
+        idx = np.searchsorted(pos[j], cur_pos[m], side="right")
+        ok = idx < len(pos[j])
+        upd_pos, upd_stp = cur_pos[m], cur_stp[m]
+        upd_pos[ok] = pos[j][idx[ok]]
+        upd_stp[ok] = j + 1
+        cur_pos[m], cur_stp[m] = upd_pos, upd_stp
+    done = cur_stp == k
+    ends = cur_pos[done]
+    ok = (ts[ends] - tsf[done]) <= within
+    matches = list(zip(sid[done][ok].tolist(), ids[ends][ok].tolist(),
+                       tsf[done][ok].tolist(), ts[ends][ok].tolist()))
+    # ts is non-decreasing in id (contract), so a pending span already
+    # past `within` can never complete
+    live = ~done & ((int(ts[-1]) - tsf) <= within)
+    return (sid[live], tsf[live], cur_stp[live], np.zeros(int(live.sum()), dtype=bool)), matches
+
+
+def _contiguity_kernel(pending, last_id, last_ts, ids, fl, ts, *, quant: list[str],
+                       within: int | None):
+    """Strict contiguity over one key's new rows of a micro-batch (sorted
+    by id, drop rule applied; ``fl`` is the rows × steps flag matrix),
+    with a '1' or a greedy-maximal '+' quantifier per step (batch
+    ``_match_events_kleene`` semantics; a strict pattern is all '1').
+    A pending partial is (start_id, ts_first, step, in-run). Each +
+    step's run STOPS are the row positions where the predicate fails or
+    contiguity breaks; a cohort of partials advances through them with
+    searchsorted exactly like the batch join ladder, in at most k vector
+    rounds. A partial WAITING to bind a step dies on the next row unless
+    it matches; an IN-RUN partial survives batches only while its run
+    spans them. Final-+ runs emit on the row that CLOSES them (¬p or id
+    gap — gap closure is a completed match, as in batch); a run still
+    open at stream end is never emitted (the documented stream-end
+    caveat). A completion whose span exceeds ``within`` is discarded;
+    with a + in the pattern a pending partial also expires once the last
+    seen ts outruns its span (ts non-decreasing in id). Without a +, a
+    partial lasts at most k-1 rows and ts may run in any order. Returns
+    the pending partials and the matches as (start_id, end_id,
+    ts_first, ts_last)."""
+    p_sid, p_tsf, p_stp, p_run = pending
+    k, n = len(quant), len(ids)
+    cont = np.empty(n, dtype=bool)
+    cont[0] = last_id is not None and ids[0] == last_id + 1
+    cont[1:] = ids[1:] == ids[:-1] + 1
+    # per + step: sorted row positions where a run STOPS
+    stops = {j: np.flatnonzero(~fl[:, j] | ~cont) for j in range(k) if quant[j] == "+"}
+
+    # partial vectors: resumed partials first, then fresh starts (every
+    # p0 row opens one). pos = the row where the partial acts next;
+    # resumed W binds at row 0, resumed R re-enters its run "before"
+    # row 0 (pos -1 marks it).
+    starts0 = np.flatnonzero(fl[:, 0])
+    pos = np.concatenate([np.where(p_run, -1, 0), starts0]).astype(np.int64)
+    stp = np.concatenate([p_stp, np.zeros(len(starts0), dtype=np.int64)])
+    run = np.concatenate([p_run, np.zeros(len(starts0), dtype=bool)])
+    sid = np.concatenate([p_sid, ids[starts0]])
+    tsf = np.concatenate([p_tsf, ts[starts0]])
+    alive = np.ones(len(pos), dtype=bool)
+    pending = np.zeros(len(pos), dtype=bool)
+    matches = []
+
+    def _emit(i: int, e: int) -> None:
+        """Record a completion ending at batch row e (e == -1 ⇒ the run
+        closed exactly at the batch boundary: end row = previous batch's
+        last row)."""
+        eid = int(ids[e]) if e >= 0 else int(last_id)
+        ets = int(ts[e]) if e >= 0 else int(last_ts)
+        if within is None or ets - int(tsf[i]) <= within:
+            matches.append((int(sid[i]), eid, int(tsf[i]), ets))
+
+    def _bind(idx, j):
+        """Vectorized binding of step j for partials (by index array) at
+        their pos: past-end ⇒ pending W(j); else the row must satisfy
+        the predicate and (except a fresh step-0 start) be contiguous.
+        Returns the indices that bound, with their row positions."""
+        p = pos[idx]
+        past = p >= n
+        pending[idx[past]] = True
+        inb, pi = idx[~past], p[~past]
+        okc = fl[pi, j]
+        if j > 0:
+            okc = okc & cont[pi]
+        alive[inb[~okc]] = False
+        return inb[okc], pi[okc]
+
+    for j in range(k):
+        m = alive & ~pending & (stp == j)
+        if not m.any():
+            continue
+        if quant[j] == "+":
+            st = stops[j]
+            # split BEFORE mutating: handling the resumed cohort
+            # rewrites run/stp in place, and a rebound resumed partial
+            # must NOT re-enter this step's fresh-binding arm
+            mri = np.flatnonzero(m & run)
+            mbi = np.flatnonzero(m & ~run)
+            if len(mri):
+                stop0 = int(st[0]) if len(st) else -1
+                if stop0 == -1:
+                    pending[mri] = True  # still in run past batch
+                elif j == k - 1:
+                    alive[mri] = False
+                    for i in mri.tolist():
+                        _emit(i, stop0 - 1)
+                else:
+                    pos[mri] = stop0  # bind next step at the stop
+                    stp[mri] = j + 1
+                    run[mri] = False
+            # fresh bindings at pos = start of a new run
+            if len(mbi):
+                bi, bp = _bind(mbi, j)
+                if len(bi):
+                    nx = np.searchsorted(st, bp, side="right")
+                    has_stop = nx < len(st)
+                    # no stop in batch ⇒ pending R(j)
+                    pending[bi[~has_stop]] = True
+                    run[bi[~has_stop]] = True
+                    wi, sp = bi[has_stop], st[nx[has_stop]]
+                    if j == k - 1:
+                        alive[wi] = False
+                        for i, e in zip(wi.tolist(), sp.tolist()):
+                            _emit(i, int(e) - 1)
+                    else:
+                        pos[wi] = sp
+                        stp[wi] = j + 1
+        else:  # quantifier '1'
+            bi, bp = _bind(np.flatnonzero(m), j)
+            if len(bi):
+                if j == k - 1:
+                    alive[bi] = False
+                    for i, e in zip(bi.tolist(), bp.tolist()):
+                        _emit(i, int(e))
+                else:
+                    pos[bi] = bp + 1
+                    stp[bi] = j + 1
+    live = alive & pending
+    if within is not None and "+" in quant:
+        # minimal possible completion span already too long
+        live &= (int(ts[-1]) - tsf) <= within
+    return (sid[live], tsf[live], stp[live], run[live]), matches
 
 
 def stream_match_events(
@@ -961,55 +1159,57 @@ def stream_match_events(
     mode: str = "strict",
     quantifiers: str | Sequence[str] | None = None,
 ) -> DataFrame:
-    """CEP strict-contiguity sequence match in streaming — the stateful
-    counterpart of ``operators.cep.match_events`` (same contract: per-
-    key DENSE monotone ids, overlapping matches, nulls = False; see
-    that module's docstring for the semantics and the north-rule
-    motivation).
+    """CEP sequence match in streaming — the stateful counterpart of
+    ``operators.cep.match_events`` (same contract: per-key DENSE
+    monotone ids, overlapping matches, nulls = False; see that module's
+    docstring for the semantics and the north-rule motivation).
 
-    The step predicates are projected as boolean columns BEFORE the
-    stateful op (Catalyst, no Python), so the processor only does id
-    arithmetic over bool matrices — numpy-vectorized per Arrow batch.
-    State carries exactly the last k-1 rows per key (ids, flags, ts):
-    O(keys × k) regardless of stream length. A match is emitted exactly
-    once — in the batch its COMPLETING row arrives (matches whose end
-    row sat in the carry were emitted previously). No EOS flush arm is
-    needed: a sequence either completed or it didn't — there is no
-    partial-match state to finalize, unlike windows (eosnotify).
+    One per-key processor serves every mode. The input is projected to
+    (key, id, [ts], one boolean column per step predicate) in a single
+    Catalyst ``select``. Per micro-batch, each key's rows are gathered
+    across all of its Arrow chunks and sorted once by id
+    (``_bucket_rows``); the CB "drop" rule applies once
+    (``_drop_seen``: ids at or below the key's last id are discarded —
+    the reference out-of-order drop, win_seq.hpp:289-305 — and a
+    repeated id keeps its first occurrence); then the mode's numpy
+    kernel runs once: ``_contiguity_kernel`` for strict mode, a strict
+    pattern being the all-'1' case of its quantifiers, or
+    ``_skip_kernel``.
 
-    Cross-batch arrival follows the CB "drop" rule: ids at or below
-    the last carried id are discarded (reference out-of-order drop,
-    win_seq.hpp:289-305); within-batch disorder is sorted, duplicate
-    ids keep the first occurrence.
+    State per key (``_CEP_STATE``) is its pending partial matches plus
+    the last seen (id, ts): O(active partials), not stream length. A
+    match is emitted exactly once, in the batch its COMPLETING row
+    arrives. No EOS flush arm is needed: a sequence either completed or
+    it didn't — there is no partial-match state to finalize, unlike
+    windows (eosnotify).
 
-    ``mode="skip"`` is skip-till-next-match (operators/cep.py
-    semantics: every step-0 row opens an overlapping match; each later
-    step binds to the EARLIEST following satisfying row). It REQUIRES
-    ``ts_col`` + ``within``, which is what bounds the state: open
-    matches older than ``within`` can never complete, so state per key
-    is the pending starts inside the span bound (plus the step each
-    waits for) — the per-step earliest-candidate cohort, not raw rows.
-    Additional contract for the expiry rule: ``ts_col`` must be
-    non-decreasing with ``id_col`` per key (event-time-ordered ids —
-    true of the renumbered transcript/CB ids the engine uses), so
-    "last seen ts − ts_first > within" proves no future completion.
+    - Strict, all '1': a partial waiting for its next step dies on the
+      next row unless that row matches, so a key holds at most k-1
+      partials. ``within`` only filters completions (ts_last − ts_first
+      ≤ within), as in batch; ts may run in any order.
+    - ``quantifiers`` ('1' / '+' per step, batch ``match_events``
+      semantics): strict-mode Kleene-plus with GREEDY-MAXIMAL runs. An
+      in-run partial persists only while its run keeps extending, so
+      state is bounded by run length; with ``within``, a pending
+      partial also expires once its minimal possible span exceeds it,
+      which requires ``ts_col`` non-decreasing with ``id_col`` per key.
+      One stream-end caveat, batch-parity-excepted: a FINAL ``+``
+      step's run is emitted when a later row CLOSES it (predicate fails
+      or id gap — gap closure is a completed match, exactly like
+      batch); a run still open when the stream ends is never emitted,
+      whereas batch emits its partition-end run.
+    - ``mode="skip"`` is skip-till-next-match (operators/cep.py
+      semantics: every step-0 row opens an overlapping match; each
+      later step binds to the EARLIEST following satisfying row). It
+      REQUIRES ``ts_col`` + ``within``, which is what bounds the state:
+      a pending partial expires once the last seen ts minus its
+      ts_first exceeds ``within``. Contract: ``ts_col`` is
+      non-decreasing with ``id_col`` per key (event-time-ordered ids —
+      true of the renumbered transcript/CB ids the engine uses), so the
+      expiry proves no future completion.
 
-    ``quantifiers`` ('1' / '+' per step, batch ``match_events``
-    semantics): strict-mode Kleene-plus with GREEDY-MAXIMAL runs.
-    State carries the pending partial matches — (start_id, ts_first,
-    step, in-run flag) each — plus the last seen (id, ts): a partial
-    waiting to BIND a step dies on the very next row unless it
-    matches, and an in-run partial persists only while its run keeps
-    extending, so state is O(active partials per key), bounded by
-    run length, not stream length (a ``within`` bound additionally
-    expires pending partials whose minimal possible span already
-    exceeds it). One stream-end caveat, batch-parity-excepted: a
-    FINAL ``+`` step's run is emitted when a later row CLOSES it
-    (predicate fails or id gap — gap closure is a completed match,
-    exactly like batch); a run still open when the stream ends is
-    never emitted (no partial-match EOS arm, by the same "completed
-    or it didn't" construction as fixed-k), whereas batch emits its
-    partition-end run.
+    The key may be of any type. Checkpoints of the strict and skip
+    processors from before the shared state layout do not resume.
     """
     k = len(steps)
     if k < 2:
@@ -1032,419 +1232,44 @@ def stream_match_events(
             "Kleene-plus quantifiers are strict-mode only (greedy runs "
             "are defined by contiguity)"
         )
-    proj = df
-    for j, s in enumerate(steps):
-        proj = proj.withColumn(f"_s{j}", F.coalesce(s.cast("boolean"), F.lit(False)))
+    kernel = (partial(_skip_kernel, within=int(within)) if mode == "skip"
+              else partial(_contiguity_kernel, quant=quant, within=within))
+    has_ts = ts_col is not None
     scols = [f"_s{j}" for j in range(k)]
-    has_ts = ts_col is not None
-    out_cols = [key, "start_id", "end_id"] + (
-        ["ts_first", "ts_last"] if has_ts else []
+    proj = df.select(
+        *dict.fromkeys([key, id_col, *([ts_col] if has_ts else [])]),
+        *[F.coalesce(s.cast("boolean"), F.lit(False)).alias(c) for s, c in zip(steps, scols)],
     )
-    # ADVICE r6: derive the key field's type instead of hardcoding
-    # string — an int/long-keyed caller gets a correct schema, not a
-    # runtime mismatch
-    key_ddl = df.schema[key].dataType.simpleString()
-    out_schema = f"{key} {key_ddl}, start_id long, end_id long" + (
-        ", ts_first long, ts_last long" if has_ts else ""
-    )
-    if mode == "skip":
-        return _stream_match_skip(
-            proj, key, id_col, scols, ts_col, int(within), k,
-            out_cols, out_schema,
-        )
-    if "+" in quant:
-        return _stream_match_kleene(
-            proj, key, id_col, scols, quant, ts_col, within, k,
-            out_cols, out_schema,
-        )
-    state_schema = "ids array<long>, ts array<long>, flags array<array<boolean>>"
+    cols = {**dict.fromkeys(scols, bool), **({ts_col: np.int64} if has_ts else {})}
+    m_cols = ["start_id", "end_id"] + (["ts_first", "ts_last"] if has_ts else [])
+    out_schema = f"{key} {_key_ddl(df, key)}, " + ", ".join(f"{c} long" for c in m_cols)
+    no_keys, no_id = np.empty(0, dtype=object), np.iinfo(np.int64).min
 
     def proc(
         kk: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            sids, sts, sflags = state.get
-            carry_ids = np.asarray(sids, dtype=np.int64)
-            carry_ts = np.asarray(sts, dtype=np.int64)
-            carry_fl = (
-                np.asarray([list(r) for r in sflags], dtype=bool)
-                if len(sids)
-                else np.empty((0, k), dtype=bool)
-            )
-        else:
-            carry_ids = np.empty(0, dtype=np.int64)
-            carry_ts = np.empty(0, dtype=np.int64)
-            carry_fl = np.empty((0, k), dtype=bool)
-        matches = []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            fl = np.column_stack([pdf[c].to_numpy(dtype=bool) for c in scols])
-            ts = (
-                pdf[ts_col].to_numpy(dtype=np.int64)
-                if has_ts
-                else np.zeros(len(ids), dtype=np.int64)
-            )
-            order = np.argsort(ids, kind="stable")
-            ids, fl, ts = ids[order], fl[order], ts[order]
-            uniq = np.concatenate([[True], ids[1:] != ids[:-1]])
-            ids, fl, ts = ids[uniq], fl[uniq], ts[uniq]
-            if len(carry_ids):
-                keep = ids > carry_ids[-1]
-                ids, fl, ts = ids[keep], fl[keep], ts[keep]
-            if not len(ids):
-                continue
-            n_carry = len(carry_ids)
-            a_ids = np.concatenate([carry_ids, ids])
-            a_fl = np.vstack([carry_fl, fl])
-            a_ts = np.concatenate([carry_ts, ts])
-            n = len(a_ids)
-            if n >= k:
-                ok = a_fl[: n - k + 1, 0].copy()
-                for j in range(1, k):
-                    ok &= a_fl[j : n - k + 1 + j, j]
-                ok &= a_ids[k - 1 :] == a_ids[: n - k + 1] + (k - 1)
-                if within is not None:
-                    ok &= (a_ts[k - 1 :] - a_ts[: n - k + 1]) <= within
-                starts = np.nonzero(ok)[0]
-                # exactly-once: only matches whose END row arrived now
-                starts = starts[starts + k - 1 >= n_carry]
-                for i in starts.tolist():
-                    row = (kk[0], int(a_ids[i]), int(a_ids[i + k - 1]))
-                    if has_ts:
-                        row += (int(a_ts[i]), int(a_ts[i + k - 1]))
-                    matches.append(row)
-            carry_ids = a_ids[max(0, n - (k - 1)) :]
-            carry_fl = a_fl[max(0, n - (k - 1)) :]
-            carry_ts = a_ts[max(0, n - (k - 1)) :]
-        state.update(
-            (
-                carry_ids.tolist(),
-                carry_ts.tolist(),
-                [[bool(x) for x in r] for r in carry_fl],
-            )
+        sid, tsf, stp, run, last_id, last_ts = (
+            state.get if state.exists else ([], [], [], [], None, None)
         )
+        _, kid, ids, vals = _bucket_rows(pdfs, key, id_col, cols, no_keys)
+        last = np.array([no_id if last_id is None else last_id], dtype=np.int64)
+        keep = _drop_seen(kid, ids, last)[0]
+        if not keep.any():
+            return
+        ids = ids[keep]
+        fl = np.column_stack([vals[c][keep] for c in scols])
+        ts = vals[ts_col][keep] if has_ts else np.zeros(len(ids), dtype=np.int64)
+        pending = (np.asarray(sid, dtype=np.int64), np.asarray(tsf, dtype=np.int64),
+                   np.asarray(stp, dtype=np.int64), np.asarray(run, dtype=bool))
+        pending, matches = kernel(pending, last_id, last_ts, ids, fl, ts)
+        state.update((*(a.tolist() for a in pending), int(ids[-1]), int(ts[-1])))
         if matches:
-            yield pd.DataFrame(matches, columns=out_cols)
+            out = pd.DataFrame(matches, columns=["start_id", "end_id", "ts_first", "ts_last"])
+            out.insert(0, key, kk[0])
+            yield out[[key, *m_cols]]
 
     return proj.groupBy(key).applyInPandasWithState(
-        proc, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def _stream_match_skip(
-    proj: DataFrame,
-    key: str,
-    id_col: str,
-    scols: list[str],
-    ts_col: str,
-    within: int,
-    k: int,
-    out_cols: list[str],
-    out_schema: str,
-) -> DataFrame:
-    """skip-till-next-match stateful matcher: state = pending starts
-    (start_id, ts_first, step-awaited) per key, bounded by the
-    ``within`` span. Greedy-earliest binding means every pending match
-    at step j binds to the SAME next step-j row, so a batch advances
-    whole cohorts with chained ``searchsorted`` over the step-position
-    arrays — numpy-vectorized, no per-row Python. Emits exactly once,
-    in the batch the completing row arrives; a completion whose span
-    exceeds ``within`` is discarded outright (earliest completion is
-    minimal, so no later completion can satisfy the bound), and
-    pending starts expire once the last seen ts outruns their span."""
-    state_schema = "sid array<long>, tsf array<long>, stp array<int>, last_id long"
-
-    def proc(
-        kk: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            s_sid, s_tsf, s_stp, last_id = state.get
-            pend_sid = np.asarray(s_sid, dtype=np.int64)
-            pend_tsf = np.asarray(s_tsf, dtype=np.int64)
-            pend_stp = np.asarray(s_stp, dtype=np.int64)
-        else:
-            pend_sid = np.empty(0, dtype=np.int64)
-            pend_tsf = np.empty(0, dtype=np.int64)
-            pend_stp = np.empty(0, dtype=np.int64)
-            last_id = None
-        matches = []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            fl = np.column_stack([pdf[c].to_numpy(dtype=bool) for c in scols])
-            ts = pdf[ts_col].to_numpy(dtype=np.int64)
-            order = np.argsort(ids, kind="stable")
-            ids, fl, ts = ids[order], fl[order], ts[order]
-            uniq = np.concatenate([[True], ids[1:] != ids[:-1]])
-            ids, fl, ts = ids[uniq], fl[uniq], ts[uniq]
-            if last_id is not None:
-                keep = ids > last_id
-                ids, fl, ts = ids[keep], fl[keep], ts[keep]
-            if not len(ids):
-                continue
-            pos = {j: np.nonzero(fl[:, j])[0] for j in range(k)}
-            # pending cohorts bind anywhere in this batch (their rows
-            # are strictly before it); new starts bind strictly after
-            # their own row
-            n_pend = len(pend_sid)
-            cur_pos = np.concatenate(
-                [np.full(n_pend, -1, dtype=np.int64), pos[0]]
-            )
-            cur_stp = np.concatenate(
-                [pend_stp, np.ones(len(pos[0]), dtype=np.int64)]
-            )
-            sid = np.concatenate([pend_sid, ids[pos[0]]])
-            tsf = np.concatenate([pend_tsf, ts[pos[0]]])
-            for j in range(1, k):
-                m = cur_stp == j
-                if not m.any() or not len(pos[j]):
-                    continue
-                idx = np.searchsorted(pos[j], cur_pos[m], side="right")
-                ok = idx < len(pos[j])
-                bound = np.where(ok, pos[j][np.minimum(idx, len(pos[j]) - 1)], -1)
-                upd_pos = cur_pos[m]
-                upd_stp = cur_stp[m]
-                upd_pos[ok] = bound[ok]
-                upd_stp[ok] = j + 1
-                cur_pos[m] = upd_pos
-                cur_stp[m] = upd_stp
-            done = cur_stp == k
-            if done.any():
-                ends = cur_pos[done]
-                span_ok = (ts[ends] - tsf[done]) <= within
-                for s, e, tf in zip(
-                    sid[done][span_ok].tolist(),
-                    ends[span_ok].tolist(),
-                    tsf[done][span_ok].tolist(),
-                ):
-                    matches.append(
-                        (kk[0], int(s), int(ids[e]), int(tf), int(ts[e]))
-                    )
-            stalled = ~done
-            # expiry: ts is non-decreasing in id (contract), so a
-            # pending span already past `within` can never complete
-            live = stalled & ((int(ts[-1]) - tsf) <= within)
-            pend_sid, pend_tsf, pend_stp = sid[live], tsf[live], cur_stp[live]
-            last_id = int(ids[-1])
-        state.update(
-            (
-                pend_sid.tolist(),
-                pend_tsf.tolist(),
-                [int(x) for x in pend_stp.tolist()],
-                last_id,
-            )
-        )
-        if matches:
-            yield pd.DataFrame(matches, columns=out_cols)
-
-    return proj.groupBy(key).applyInPandasWithState(
-        proc, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def _stream_match_kleene(
-    proj: DataFrame,
-    key: str,
-    id_col: str,
-    scols: list[str],
-    quant: list[str],
-    ts_col: str | None,
-    within: int | None,
-    k: int,
-    out_cols: list[str],
-    out_schema: str,
-) -> DataFrame:
-    """Strict-contiguity Kleene-plus stateful matcher (greedy-maximal
-    runs, batch ``_match_events_kleene`` semantics). State per key =
-    the pending partial matches — (start_id, ts_first, step, in-run) —
-    plus the last seen (id, ts). Advancement is vectorized over
-    partials: per batch, each + step's run STOPS are the row positions
-    where the predicate fails or contiguity breaks; a cohort of
-    partials advances through them with searchsorted exactly like the
-    batch join ladder, in at most k vector rounds. A partial WAITING
-    to bind a step dies on the next row unless it matches; an IN-RUN
-    partial survives batches only while its run spans them, so state
-    is O(active partials). Final-+ runs emit on the row that CLOSES
-    them (¬p or id gap — gap closure is a completed match, as in
-    batch); a run still open at stream end is never emitted (the
-    documented stream-end caveat)."""
-    has_ts = ts_col is not None
-    state_schema = (
-        "sid array<long>, tsf array<long>, stp array<int>, "
-        "run array<boolean>, last_id long, last_ts long"
-    )
-
-    def proc(
-        kk: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            s_sid, s_tsf, s_stp, s_run, last_id, last_ts = state.get
-            p_sid = np.asarray(s_sid, dtype=np.int64)
-            p_tsf = np.asarray(s_tsf, dtype=np.int64)
-            p_stp = np.asarray(s_stp, dtype=np.int64)
-            p_run = np.asarray(s_run, dtype=bool)
-        else:
-            p_sid = np.empty(0, dtype=np.int64)
-            p_tsf = np.empty(0, dtype=np.int64)
-            p_stp = np.empty(0, dtype=np.int64)
-            p_run = np.empty(0, dtype=bool)
-            last_id, last_ts = None, None
-        matches = []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            fl = np.column_stack([pdf[c].to_numpy(dtype=bool) for c in scols])
-            ts = (
-                pdf[ts_col].to_numpy(dtype=np.int64)
-                if has_ts
-                else np.zeros(len(ids), dtype=np.int64)
-            )
-            order = np.argsort(ids, kind="stable")
-            ids, fl, ts = ids[order], fl[order], ts[order]
-            uniq = np.concatenate([[True], ids[1:] != ids[:-1]])
-            ids, fl, ts = ids[uniq], fl[uniq], ts[uniq]
-            if last_id is not None:
-                keep = ids > last_id
-                ids, fl, ts = ids[keep], fl[keep], ts[keep]
-            if not len(ids):
-                continue
-            n = len(ids)
-            cont = np.empty(n, dtype=bool)
-            cont[0] = last_id is not None and ids[0] == last_id + 1
-            cont[1:] = ids[1:] == ids[:-1] + 1
-            # per + step: sorted row positions where a run STOPS
-            stops = {
-                j: np.nonzero(~fl[:, j] | ~cont)[0]
-                for j in range(k)
-                if quant[j] == "+"
-            }
-
-            # partial vectors: resumed partials first, then fresh
-            # starts (every p0 row opens one). pos = the row where the
-            # partial acts next; resumed W binds at row 0, resumed R
-            # re-enters its run "before" row 0 (pos -1 marks it).
-            starts0 = np.nonzero(fl[:, 0])[0]
-            pos = np.concatenate(
-                [np.where(p_run, -1, 0), starts0]
-            ).astype(np.int64)
-            stp = np.concatenate(
-                [p_stp, np.zeros(len(starts0), dtype=np.int64)]
-            )
-            run = np.concatenate(
-                [p_run, np.zeros(len(starts0), dtype=bool)]
-            )
-            sid = np.concatenate([p_sid, ids[starts0]])
-            tsf = np.concatenate([p_tsf, ts[starts0]])
-            alive = np.ones(len(pos), dtype=bool)
-            pending = np.zeros(len(pos), dtype=bool)
-
-            def _emit(i: int, e: int) -> None:
-                """Record a completion ending at batch row e (e == -1 ⇒
-                the run closed exactly at the batch boundary: end row =
-                previous batch's last row)."""
-                eid = int(ids[e]) if e >= 0 else int(last_id)
-                ets = int(ts[e]) if e >= 0 else int(last_ts)
-                if within is None or ets - int(tsf[i]) <= within:
-                    row = (kk[0], int(sid[i]), eid)
-                    if has_ts:
-                        row += (int(tsf[i]), ets)
-                    matches.append(row)
-
-            def _bind(idx, j):
-                """Vectorized binding of step j for partials (by index
-                array) at their pos: past-end ⇒ pending W(j); else the
-                row must satisfy the predicate and (except a fresh
-                step-0 start) be contiguous. Returns the indices that
-                bound, with their row positions."""
-                p = pos[idx]
-                past = p >= n
-                pending[idx[past]] = True
-                inb = idx[~past]
-                pi = p[~past]
-                okc = fl[pi, j]
-                if j > 0:
-                    okc = okc & cont[pi]
-                alive[inb[~okc]] = False
-                return inb[okc], pi[okc]
-
-            for j in range(k):
-                m = alive & ~pending & (stp == j)
-                if not m.any():
-                    continue
-                if quant[j] == "+":
-                    st = stops[j]
-                    # split BEFORE mutating: handling the resumed
-                    # cohort rewrites run/stp in place, and a rebound
-                    # resumed partial must NOT re-enter this step's
-                    # fresh-binding arm
-                    mri = np.nonzero(m & run)[0]
-                    mbi = np.nonzero(m & ~run)[0]
-                    if len(mri):
-                        stop0 = int(st[0]) if len(st) else -1
-                        if stop0 == -1:
-                            pending[mri] = True  # still in run past batch
-                        elif j == k - 1:
-                            alive[mri] = False
-                            for i in mri.tolist():
-                                _emit(i, stop0 - 1)
-                        else:
-                            pos[mri] = stop0  # bind next step at the stop
-                            stp[mri] = j + 1
-                            run[mri] = False
-                    # fresh bindings at pos = start of a new run
-                    if len(mbi):
-                        bi, bp = _bind(mbi, j)
-                        if len(bi):
-                            nx = np.searchsorted(st, bp, side="right")
-                            has_stop = nx < len(st)
-                            # no stop in batch ⇒ pending R(j)
-                            pending[bi[~has_stop]] = True
-                            run[bi[~has_stop]] = True
-                            wi = bi[has_stop]
-                            sp = st[nx[has_stop]]
-                            if j == k - 1:
-                                alive[wi] = False
-                                for i, e in zip(wi.tolist(), sp.tolist()):
-                                    _emit(i, int(e) - 1)
-                            else:
-                                pos[wi] = sp
-                                stp[wi] = j + 1
-                else:  # quantifier '1'
-                    bi, bp = _bind(np.nonzero(m)[0], j)
-                    if len(bi):
-                        if j == k - 1:
-                            alive[bi] = False
-                            for i, e in zip(bi.tolist(), bp.tolist()):
-                                _emit(i, int(e))
-                        else:
-                            pos[bi] = bp + 1
-                            stp[bi] = j + 1
-            live = alive & pending
-            if within is not None:
-                # minimal possible completion span already too long
-                live &= (int(ts[-1]) - tsf) <= within
-            p_sid, p_tsf = sid[live], tsf[live]
-            p_stp, p_run = stp[live], run[live]
-            last_id, last_ts = int(ids[-1]), int(ts[-1])
-        state.update(
-            (
-                p_sid.tolist(),
-                p_tsf.tolist(),
-                [int(x) for x in p_stp.tolist()],
-                [bool(x) for x in p_run.tolist()],
-                last_id,
-                last_ts,
-            )
-        )
-        if matches:
-            yield pd.DataFrame(matches, columns=out_cols)
-
-    return proj.groupBy(key).applyInPandasWithState(
-        proc, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        proc, out_schema, _CEP_STATE, "append", GroupStateTimeout.NoTimeout
     )
 
 
@@ -1559,7 +1384,9 @@ def _flush_cb_buffered(st: DataFrame, key: str, spec: WinSpec, aggs: dict) -> Da
                 if len(done[0]):
                     yield _cb_frame(s.keys, done, ops, names, key, spec)
 
-    return st.select("value.groupState.*").mapInPandas(flush, _cb_out_schema(key, aggs))
+    rows = st.select("value.groupState.*")
+    key_ddl = rows.schema["keys"].dataType.elementType.simpleString()
+    return rows.mapInPandas(flush, _cb_out_schema(key, key_ddl, aggs))
 
 
 #: Catalyst aggregation-buffer layout per declared op (slots appear in
@@ -1783,27 +1610,35 @@ def stream_accumulate(
     bucket per micro-batch, one state row per bucket holding each key's
     (s, c). Requires per-key-ordered arrival (same contract as
     stream_cb_windows); within a micro-batch each key's rows are sorted
-    by id once, across all of its Arrow chunks."""
-    out_schema = f"{key} string, {id_col} long, running_sum double, running_cnt long"
-    state_schema = "keys array<string>, s array<double>, c array<long>"
+    by id once, across all of its Arrow chunks. A null value counts in
+    running_cnt (``count(*)``) and is skipped by running_sum, which is
+    null until the key's first non-null value — SQL ``sum`` over the
+    running frame, as in batch ``accumulate``. The key may be of any
+    type."""
+    key_ddl = _key_ddl(df, key)
+    out_schema = f"{key} {key_ddl}, {id_col} long, running_sum double, running_cnt long"
+    state_schema = f"keys array<{key_ddl}>, s array<double>, c array<long>"
 
     def proc(
         _bk: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         known, s0, c0 = state.get if state.exists else ([], [], [])
         keys, kid, ids, vals = _bucket_rows(
-            pdfs, key, id_col, [value_col], np.asarray(known, dtype=object)
+            pdfs, key, id_col, {value_col: np.float64}, np.asarray(known, dtype=object)
         )
         if not len(ids):
             return
         fresh = len(keys) - len(known)
-        s = np.concatenate([np.asarray(s0, dtype=np.float64), np.zeros(fresh)])
+        # s is NaN for a key with no non-null value yet (a null sum)
+        s = np.concatenate([np.asarray(s0, dtype=np.float64), np.full(fresh, np.nan)])
         c = np.concatenate([np.asarray(c0, dtype=np.int64), np.zeros(fresh, dtype=np.int64)])
-        # per-key running sums in id order (a segmented cumsum); a null
-        # value makes its key's sum NaN from there on, across batches
-        # too (the NaN is carried in state), as np.cumsum over the key
-        g = pd.Series(vals[value_col]).groupby(kid, sort=False)
-        run_s = s[kid] + g.cumsum(skipna=False).to_numpy()
+        # per-key running sums of the non-null values in id order (a
+        # segmented cumsum) and whether the key has had one yet
+        v = vals[value_col]
+        g = pd.DataFrame({"v": np.nan_to_num(v), "n": ~np.isnan(v)}).groupby(kid, sort=False)
+        run = g.cumsum()
+        had = ~np.isnan(s[kid]) | (run["n"].to_numpy() > 0)
+        run_s = np.where(had, np.nan_to_num(s[kid]) + run["v"].to_numpy(), np.nan)
         run_c = c[kid] + g.cumcount().to_numpy() + 1
         ends = _run_ends(kid)
         s[kid[ends]], c[kid[ends]] = run_s[ends], run_c[ends]
