@@ -1204,9 +1204,10 @@ def q_cep_skip(spark, sf_dir):
     """CEP skip-till-next-match (r7, VERDICT r6 #5): click → view →
     purchase with OTHER EVENTS BETWEEN — each step binds to the
     earliest later satisfying row (greedy-earliest, so the `within`
-    span bound is exact). Plan: one keyed window computing per-step
-    next-occurrence pointers + equi joins chaining them — cost
-    O(starts × k), never a per-span pair product (plan-tested)."""
+    span bound is exact). Plan: match_events' completion stack — per
+    step, a running min over every later row (the reversed keyed
+    window) that carries the next step's completion; one exchange, no
+    joins, linear per key (plan-tested)."""
     # (us, event_id) renumbering + order_by: reuse the renumbering
     # sort in the matcher's window stack (see q_cep_pattern)
     ids = cb_ids(
@@ -1261,10 +1262,11 @@ def q_cep_kleene(spark, sf_dir):
     GREEDY-MAXIMAL (the purchase binds at the first non-view row after
     the run; deterministic, output linear in starts — all-sub-runs
     semantics would be quadratic in run length). Strict contiguity
-    over the dense renumbered ids. Plan: the per-row run boundary
-    (first following non-view) lives in the SAME keyed window as the
-    step flags; binding is the (key, id) equi-join ladder — never a
-    per-span product (plan-tested in tests/test_cep.py)."""
+    over the dense renumbered ids. Plan: match_events' completion
+    stack — the run's stop (first later row that is not a contiguous
+    view) is a running min over the reversed keyed window carrying the
+    purchase step's completion; one exchange, no joins (plan-tested in
+    tests/test_cep.py)."""
     # (us, event_id) renumbering + order_by: reuse the renumbering
     # sort in the matcher's window stack (see q_cep_pattern)
     ids = cb_ids(

@@ -295,22 +295,27 @@ def test_match_events_skip_vs_pandas_reference(spark):
         assert got == want and len(want) > 0
 
 
-def test_match_events_skip_plan_no_quadratic_join(spark):
-    """The greedy chain is next-pointer EQUI joins — never a per-span
-    theta join or cartesian blowup."""
+def _assert_zero_join_plans(spark, events: str) -> None:
+    """Every mode of one key's ``events`` plans as the completion stack:
+    no join of any kind and exactly one exchange."""
     from windflow_spark.plans import audit
 
     docs = spark.createDataFrame(
-        pd.DataFrame(
-            {"k": ["a"] * 8, "i": range(8), "ev": list("ABXCABXC"),
-             "us": range(8)}
-        )
+        pd.DataFrame({"k": ["a"] * len(events), "i": range(len(events)),
+                      "ev": list(events), "us": range(len(events))})
     )
     steps = [F.col("ev") == "A", F.col("ev") == "B", F.col("ev") == "C"]
-    out = cep.match_events(docs, "k", "i", steps, ts_col="us", mode="skip")
-    plan = audit.physical_plan(out)
-    assert not audit.has_cartesian(out)
-    assert "NestedLoop" not in plan, plan
+    for kw in ({}, {"mode": "skip"}, {"quantifiers": "1+1"}):
+        out = cep.match_events(docs, "k", "i", steps, ts_col="us", **kw)
+        plan = audit.physical_plan(out)
+        assert "Join" not in plan and "CartesianProduct" not in plan, (kw, plan)
+        assert audit.count_exchanges(out) == 1, (kw, plan)
+
+
+def test_match_events_skip_plan_no_quadratic_join(spark):
+    """Skip mode's greedy chain, and the other two modes on the same
+    rows, are one keyed window stack: no join, one exchange."""
+    _assert_zero_join_plans(spark, "ABXCABXC")
 
 
 def test_stream_match_skip_equals_batch(spark, tdir):
@@ -599,28 +604,14 @@ def test_match_events_kleene_vs_pandas_reference(spark):
 
 
 def test_match_events_kleene_plan(spark):
-    """Same plan discipline as skip mode: equi-join ladder, no
-    cartesian/NLJ blowup."""
-    from windflow_spark.plans import audit
-
-    docs = spark.createDataFrame(
-        pd.DataFrame(
-            {"k": ["a"] * 8, "i": range(8), "ev": list("ABBCABBC"),
-             "us": range(8)}
-        )
-    )
-    steps = [F.col("ev") == "A", F.col("ev") == "B", F.col("ev") == "C"]
-    out = cep.match_events(docs, "k", "i", steps, ts_col="us", quantifiers="1+1")
-    plan = audit.physical_plan(out)
-    assert not audit.has_cartesian(out)
-    assert "NestedLoop" not in plan, plan
+    """Kleene's run stops, and the other two modes on the same rows,
+    are one keyed window stack: no join, one exchange."""
+    _assert_zero_join_plans(spark, "ABBCABBC")
 
 
-def test_match_events_order_by_isomorphic(spark):
-    """order_by (r8): window ordering by columns order-isomorphic to
-    the id (here `us`, which the dense ids were derived from) must
-    give identical matches in every mode — the point is only to let
-    the matcher's windows reuse the upstream renumbering sort."""
+def _sweep_events(spark):
+    """400 random A/B/C events over three keys, with dense per-key ids
+    in ``us`` order."""
     rng = np.random.default_rng(11)
     n = 400
     pdf = pd.DataFrame(
@@ -630,8 +621,16 @@ def test_match_events_order_by_isomorphic(spark):
             "us": np.arange(n, dtype=np.int64) * 7,
         }
     )
-    pdf["i"] = pdf.groupby("k").cumcount()  # dense ids in us order
-    df = spark.createDataFrame(pdf)
+    pdf["i"] = pdf.groupby("k").cumcount()
+    return spark.createDataFrame(pdf)
+
+
+def test_match_events_order_by_isomorphic(spark):
+    """order_by (r8): window ordering by columns order-isomorphic to
+    the id (here `us`, which the dense ids were derived from) must
+    give identical matches in every mode — the point is only to let
+    the matcher's windows reuse the upstream renumbering sort."""
+    df = _sweep_events(spark)
     steps = [F.col("ev") == "A", F.col("ev") == "B", F.col("ev") == "C"]
     for kw in (
         {"mode": "skip"},
@@ -647,6 +646,22 @@ def test_match_events_order_by_isomorphic(spark):
         b = base.sort_values(cols).reset_index(drop=True)
         a = alt.sort_values(cols).reset_index(drop=True)
         assert a.equals(b) and len(b) > 0, (kw, len(a), len(b))
+
+
+def test_match_events_strict_matches_are_skip_matches(spark):
+    """Cross-mode property: greedy-earliest binding makes every strict
+    match a skip match of the same start with the same end — the
+    contiguous binding is the earliest one — on the random sweep rows."""
+    df = _sweep_events(spark)
+    steps = [F.col("ev") == "A", F.col("ev") == "B", F.col("ev") == "C"]
+
+    def matches(**kw):
+        got = cep.match_events(df, "k", "i", steps, **kw).toPandas()
+        return {(r.k, r.start_id): r.end_id for r in got.itertuples()}
+
+    strict, skip = matches(), matches(mode="skip")
+    assert strict and len(skip) > len(strict)
+    assert all(skip.get(s) == e for s, e in strict.items())
 
 
 def test_match_events_kleene_validation(spark):
@@ -812,11 +827,11 @@ def test_match_events_kleene_property_sweep(spark):
 
 
 def test_match_events_hot_key_linear_frames(spark):
-    """A hot key (one key, a few thousand rows): the skip and Kleene
-    matchers take their "every later row" mins over a running frame on
-    the reversed order — no UnboundedFollowing frame, which Spark
-    re-aggregates for every row (O(n²) per key) — and still equal the
-    pandas references."""
+    """A hot key (one key, a few thousand rows): every mode takes its
+    "every later row" mins over a running frame on the reversed order —
+    no UnboundedFollowing frame, which Spark re-aggregates for every row
+    (O(n²) per key) — and still equals the pandas references (strict
+    mode is the all-'1' Kleene reference)."""
     from windflow_spark.plans import audit
 
     rng = np.random.default_rng(41)
@@ -830,7 +845,7 @@ def test_match_events_hot_key_linear_frames(spark):
     df = spark.createDataFrame(pdf)
     steps = [F.col("ev") == "A", F.col("ev") == "B", F.col("ev") == "C"]
     preds = [lambda r, e=e: r["ev"] == e for e in "ABC"]
-    for kw in ({"mode": "skip"}, {"quantifiers": "1+1"}, {"quantifiers": "+1+"}):
+    for kw in ({}, {"mode": "skip"}, {"quantifiers": "1+1"}, {"quantifiers": "+1+"}):
         out = cep.match_events(df, "k", "i", steps, ts_col="us", **kw)
         plan = audit.physical_plan(out)
         assert "unboundedfollowing" not in plan.lower(), (kw, plan)
@@ -838,5 +853,5 @@ def test_match_events_hot_key_linear_frames(spark):
         if "mode" in kw:
             want = _pandas_reference_skip(pdf, preds)
         else:
-            want = _pandas_reference_kleene(pdf, preds, kw["quantifiers"])
+            want = _pandas_reference_kleene(pdf, preds, kw.get("quantifiers", "111"))
         assert got == want and len(want) > 50, kw

@@ -377,6 +377,38 @@ def test_stream_cb_out_of_order_drop_parity(spark, tdir):
         assert r["sum_value"] == float(sum(expect))
 
 
+def test_stream_cb_sparse_ids_fire_without_last_id(spark, tdir):
+    """Triggerer_CB (window.hpp:49-67): a CB window fires once a later
+    id passes its end, even when its own last id never arrives. Key k0
+    has ids 0-5, then 9-23 in a second micro-batch; under CB 4/4, gwid 1
+    (ids 4-7) holds only 4 and 5 and sits in state across the batch
+    boundary. It must reach the sink from the drain itself, leaving no
+    window open to flush, and fired ∪ flushed == batch win_seq."""
+    src_dir = str(tdir / "sparse_src")
+    os.makedirs(src_dir, exist_ok=True)
+    for n, ids in enumerate([range(0, 6), range(9, 24)]):
+        datagen.write_parquet_us(pd.DataFrame({
+            "k": "k0", "i": np.array(ids, dtype=np.int64),
+            "v": np.array(ids, dtype=np.float64),
+        }), f"{src_dir}/part-{n}.parquet")
+    spec = WinSpec("cb", 4, 4)
+    src = se.stream_source(spark, src_dir, spark.read.parquet(src_dir).schema,
+                           max_files_per_trigger=1)
+    sink, ckpt = str(tdir / "sparse_sink"), str(tdir / "sparse_ckpt")
+    se.run_available_now(se.stream_cb_windows(src, "k", "i", "v", spec), sink, ckpt)
+    fired = spark.read.parquet(sink)
+    assert sorted(fired.toPandas()["gwid"]) == [0, 1, 2, 3, 4, 5]
+    flushed = se.flush_cb_partials(spark, ckpt, "k", spec, value_col="v")
+    assert flushed.count() == 0
+    want = win_seq(
+        spark.read.parquet(src_dir), ["k"], "i", spec,
+        aggs={"sum_value": F.sum("v"), "cnt": F.count(F.lit(1))},
+    ).toPandas()
+    cols = ["k", "gwid", "sum_value", "cnt", "win_end"]
+    got = fired.unionByName(flushed).toPandas()
+    assert_frames_equal(got[cols], want[cols], ["k", "gwid"])
+
+
 def test_stream_hopping_equals_batch(spark, tx_path):
     """Streaming TB hopping (win < slide): the tumbling-of-slide +
     gap-filter route must equal the batch assign_wids hopping plan —
@@ -1049,11 +1081,17 @@ def test_cb_fold_kernels_match_per_window_reference():
                     assert (k, w) not in got, (case, k, w)
                     got[k, w] = [col[i] for col in outs]
 
+            folded = np.full(n_keys, -1)
             for part in (cut, ~cut):
                 if part.any():
                     open_, fired = fold(kid[part], ids[part],
                                         {c: x[part] for c, x in vals.items()}, open_)
                     emit(fired)
+                    # Triggerer_CB: once a key's largest folded id
+                    # reaches a window's last id, that window has fired
+                    np.maximum.at(folded, kid[part], ids[part])
+                    ends = open_[1] * slide + win - 1
+                    assert (ends > folded[open_[0]]).all(), (case, win, slide)
             emit(open_)
             want = {}
             for k in range(n_keys):
@@ -1607,3 +1645,40 @@ def test_stream_cb_histq_matches_replay(spark, tx_path, tdir):
             assert row["p50"] == want[key], (key, row["p50"], want[key])
     finally:
         del se._CB_OPS[name]
+
+
+_OUTSIDE_DRIVER = """
+import sys
+sys.path.insert(0, {repo!r})  # the driver only: workers get no sys.path
+import numpy as np, pandas as pd
+from windflow_spark.session import get_spark
+from windflow_spark.operators.windows import WinSpec
+from windflow_spark.streaming import engine as se
+spark = get_spark("outside", master="local[2]", shuffle_partitions=2, streaming=True)
+pd.DataFrame({{"k": "k0", "i": np.arange(8, dtype=np.int64),
+              "v": np.arange(8.0)}}).to_parquet("src/part-0.parquet")
+src = se.stream_source(spark, "src", spark.read.parquet("src").schema)
+stream = se.stream_cb_windows(src, "k", "i", "v", WinSpec("cb", 4, 4))
+se.run_available_now(stream, "sink", "ckpt")
+print("FIRED", spark.read.parquet("sink").count())
+"""
+
+
+def test_stateful_drain_outside_repo_without_pythonpath(tmp_path):
+    """The stateful processors call module-level kernels, which the
+    Python workers import by name: a driver started outside the repo
+    root, with the package on its own sys.path only and no PYTHONPATH,
+    must still drain (get_spark ships the package to the workers)."""
+    import subprocess
+    import sys
+
+    from tests.conftest import REPO
+
+    (tmp_path / "src").mkdir()
+    (tmp_path / "driver.py").write_text(_OUTSIDE_DRIVER.format(repo=str(REPO)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    out = subprocess.run([sys.executable, "driver.py"], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "FIRED 2" in out.stdout, out.stdout[-2000:]

@@ -25,7 +25,9 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (fallback
     ``local[*]``); ``shuffle_partitions`` defaults to the core count so
     one local run ~= one waveful of tasks. On a real cluster the same
-    knobs scale with executor count.
+    knobs scale with executor count. In local mode the Python workers
+    import ``windflow_spark`` from where this driver does, whatever the
+    working directory or PYTHONPATH.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -46,6 +48,14 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
     )
+    if master.startswith("local"):
+        # the stateful processors call module-level kernels, which the
+        # Python workers import by name: put this package's parent on
+        # their path (jobs on a cluster ship it with --py-files)
+        builder = builder.config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
     if streaming:
         # RocksDB-backed keyed state: required posture for large keyed
         # state (10^12-turn design point); HDFS-backed default would OOM.

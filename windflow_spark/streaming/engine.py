@@ -652,11 +652,13 @@ def _make_cb_fold(win: int, slide: int, aggs: dict):
     The rows of one or more keys, sorted by (key index ``kid``, id),
     fold into the open windows ``open_`` = (key index, wid, slot rows);
     it returns the windows still open and the fired ones in the same
-    layout. The wid explosion is arange arithmetic, stable-sorted by
-    (key, wid); every registry kernel then reduces the (key, wid)
-    segments of all keys at once (``batch(v, ids, starts)``, see the
-    contract above ``_CB_OPS``), and ``merge`` runs only for a window
-    that was open and also receives rows — no pandas, no per-key loop.
+    layout: a window fires once its key's largest id in ``ids`` reaches
+    its last id, open windows that got no rows included. The wid
+    explosion is arange arithmetic, stable-sorted by (key, wid); every
+    registry kernel then reduces the (key, wid) segments of all keys at
+    once (``batch(v, ids, starts)``, see the contract above
+    ``_CB_OPS``), and ``merge`` runs only for a window that was open and
+    also receives rows — no pandas, no per-key loop.
 
     Columns feeding a non-count fold must be null/NaN-free: SQL
     aggregates skip a null while the numpy kernels would propagate a
@@ -675,14 +677,14 @@ def _make_cb_fold(win: int, slide: int, aggs: dict):
                     "(filter or fillna upstream)"
                 )
         wk0, wid0, parts0 = open_
+        if not len(ids):
+            return open_, (wk0[:0], wid0[:0], parts0[:0])
         last = ids // slide
         first = np.maximum(0, (ids - win) // slide + 1)
         # hopping (win < slide): ids in a gap have last < first — an
         # empty wid range (includes/win_seq.hpp:326-338), clip to 0
         counts = np.maximum(0, last - first + 1).astype(np.int64)
         total = int(counts.sum())
-        if not total:  # an empty expansion would still make one segment
-            return open_, (wk0[:0], wid0[:0], parts0[:0])
         row = np.repeat(np.arange(len(ids)), counts)
         wid = first[row] + np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
         # stable: ids stay ascending inside each (key, window) segment
@@ -692,17 +694,14 @@ def _make_cb_fold(win: int, slide: int, aggs: dict):
         head = np.ones(total, dtype=bool)
         head[1:] = (k[1:] != k[:-1]) | (wid[1:] != wid[:-1])
         starts = np.flatnonzero(head)
-        seg_ids = ids[row]
         seg_v = {c: v[row] for c, v in vals.items()}
+        # no kernel call on an empty expansion (it would make one segment)
         parts = np.vstack([
-            np.asarray(kern(seg_v.get(c), seg_ids, starts), dtype=np.float64)
+            np.asarray(kern(seg_v.get(c), ids[row], starts), dtype=np.float64)
             .reshape(ns, -1)
             for (ns, kern, *_), c in ops
-        ]).T
+        ]).T if total else np.empty((0, parts0.shape[1]))
         sk, sw = k[starts], wid[starts]
-        # Triggerer_CB: window w fires when its last tuple (id
-        # w*slide+win-1) arrives — the largest id of its segment
-        fire = seg_ids[np.append(starts[1:], total) - 1] == sw * slide + win - 1
         if len(wk0):
             # a window open in state that also got rows: merge the two
             # partials (stable sort puts the state entry first)
@@ -715,10 +714,16 @@ def _make_cb_fold(win: int, slide: int, aggs: dict):
             stay = np.ones(len(wk0), dtype=bool)
             stay[old] = False
             wk0, wid0, parts0 = wk0[stay], wid0[stay], parts0[stay]
-        still = ~fire
-        open_ = (np.concatenate([wk0, sk[still]]), np.concatenate([wid0, sw[still]]),
-                 np.concatenate([parts0, parts[still]]))
-        return open_, (sk[fire], sw[fire], parts[fire])
+        ak, aw = np.concatenate([wk0, sk]), np.concatenate([wid0, sw])
+        ap = np.concatenate([parts0, parts])
+        # Triggerer_CB (window.hpp:49-67): a window fires once its key's
+        # largest id of this batch reaches its last id w*slide+win-1,
+        # whether or not that id arrived — windows held in state too
+        top = np.full(int(max(kid.max(), ak.max(initial=0))) + 1, -1, dtype=np.int64)
+        ends = _run_ends(kid)
+        top[kid[ends]] = ids[ends]
+        fire = aw * slide + win - 1 <= top[ak]
+        return (ak[~fire], aw[~fire], ap[~fire]), (ak[fire], aw[fire], ap[fire])
 
     return _fold
 
@@ -907,7 +912,8 @@ def stream_cb_windows(
 
     A tuple with per-key monotone id ``i`` belongs to wids
     [max(0, floor((i-win)/slide)+1), floor(i/slide)]; window w fires
-    (is emitted) when its last tuple (id == w*slide+win-1) arrives —
+    (is emitted) once its key's largest id reaches its last id
+    w*slide+win-1, whether or not a tuple with that id arrived —
     Triggerer_CB (includes/window.hpp:49-67). Partial windows remain in
     state; after a drain, ``flush_cb_partials`` reads them back from
     the checkpoint and emits them (the reference's eosnotify flush,
@@ -1030,7 +1036,7 @@ def _contiguity_kernel(pending, last_id, last_ts, ids, fl, ts, *, quant: list[st
     """Strict contiguity over one key's new rows of a micro-batch (sorted
     by id, drop rule applied; ``fl`` is the rows × steps flag matrix),
     with a '1' or a greedy-maximal '+' quantifier per step (batch
-    ``_match_events_kleene`` semantics; a strict pattern is all '1').
+    ``match_events`` semantics; a strict pattern is all '1').
     A pending partial is (start_id, ts_first, step, in-run). Each +
     step's run STOPS are the row positions where the predicate fails or
     contiguity breaks; a cohort of partials advances through them with
