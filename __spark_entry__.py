@@ -720,8 +720,9 @@ def q_streaming_cb_hll(spark, sf_dir):
     """Streaming approximate COUNT-DISTINCT windows (r7): a 64-register
     HyperLogLog as a CB fold — the registers ARE the partial slots and
     the cross-batch merge is elementwise max (the textbook mergeable
-    sketch, flowing through the SAME registry as every other fold, EOS
-    flush included). The hash is the engine-wide portable md5
+    sketch, flowing through the SAME registry as every other fold).
+    Fired windows only (Triggerer_CB); flush_cb_partials emits partial
+    ones with the same finalize. The hash is the engine-wide portable md5
     (``hll_prep``, computed in Catalyst before the stateful op — the
     Python kernel does no per-row hashing), and every estimate
     ingredient is deterministic and dyadic-exact, so the oracle
@@ -1068,12 +1069,12 @@ def q_streaming_cb_maxby(spark, sf_dir):
 def q_streaming_cb_var(spark, sf_dir):
     """Three-slot decomposable fold through the streaming CB registry
     (VERDICT r5 #5): var/std carry a (sum, sumsq, count) slot TRIPLE —
-    the batch kernel, cross-batch merge, Python finalize (and, on the
-    EOS path, the Catalyst finalizer) all walk three slots, one step
-    further toward the reference's arbitrary INC lambda
-    (win_seq.hpp:63-65). Population variance via the E[x²]−E[x]²
-    identity clamped at 0; the oracle recomputes the same identity.
-    Fired windows only (Triggerer_CB)."""
+    the batch kernel, cross-batch merge and finalize all walk three
+    slots, one step further toward the reference's arbitrary INC
+    lambda (win_seq.hpp:63-65). Population variance via the
+    E[x²]−E[x]² identity clamped at 0; the oracle recomputes the same
+    identity. Fired windows only (Triggerer_CB); flush_cb_partials
+    emits partial ones with the same finalize."""
     import uuid
 
     from windflow_spark.streaming import engine as se
@@ -1327,8 +1328,8 @@ def q_streaming_cb_histq(spark, sf_dir):
     width); finalize interpolates inside the first bucket reaching
     rank q·n. Counts are exact integers and every float op uses
     shared literals, so the oracle recomputes the IDENTICAL value.
-    Also the first driver gate whose op has NO Catalyst finalizer —
-    the EOS flush for it rides the mapInPandas fallback arm."""
+    Fired windows only (Triggerer_CB); flush_cb_partials emits partial
+    ones with the same registered finalize."""
     import uuid
 
     from windflow_spark.streaming import engine as se

@@ -55,8 +55,10 @@ def test_asof_join_vs_oracle(spark, transcripts):
 
 def test_ysb_broadcast_join(spark):
     """F6: filter event_type==0 → broadcast static dim → tumbling 10s
-    count+max per campaign (yahoo_app.hpp:149-176)."""
-    from windflow_spark.operators.windows import WinSpec, tb_window_native
+    count+max per campaign (yahoo_app.hpp:149-176), windowed by the
+    streaming TB plan (stream_win_tb) over the batch frame."""
+    from windflow_spark.operators.windows import WinSpec
+    from windflow_spark.streaming.engine import stream_win_tb
 
     events_pd, campaigns_pd = datagen.gen_ysb(n_events=9000)
     events = spark.createDataFrame(events_pd)
@@ -64,7 +66,7 @@ def test_ysb_broadcast_join(spark):
     joined = broadcast_dim_join(
         events.filter(F.col("event_type") == 0), campaigns, on="ad_id"
     )
-    got = tb_window_native(
+    got = stream_win_tb(
         joined, ["cmp_id"], "ts", WinSpec("tb", 10, 10),
         aggs={"cnt": F.count(F.lit(1)), "last_ts": F.max(F.unix_micros("ts"))},
         unit="second",

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 import datagen
 from tests.conftest import assert_frames_equal
 from windflow_spark.operators.windows import WinSpec, epoch_us, win_seq
+from windflow_spark.plans import audit
 from windflow_spark.streaming import engine as se
 
 
@@ -675,13 +676,14 @@ def test_cb_fold_rejects_nan_values():
 def test_stream_cb_eos_flush_restores_batch_parity(spark, tx_path, tdir):
     """EOS partial-window flush (win_seq.hpp:432-474 eosnotify): after
     an availableNow drain, flush_cb_partials reads the still-open
-    windows back from the checkpoint's state store and finalizes them —
-    fired ∪ flushed == the batch win_seq result INCLUDING partial
-    windows, across the FULL registry — sum/count/min/max/mean, the
-    non-scalar argmax (Catalyst finalizer projects the id slot out of
-    the persisted (value, id) pair), and var/std (3-slot Catalyst
-    finalizer over the (sum, sumsq, count) triple) — on a sliding spec
-    (every open window of every key, not just the last)."""
+    windows back from the checkpoint's state store and finalizes them
+    with the processor's own finalize — fired ∪ flushed == the batch
+    win_seq result INCLUDING partial windows, across the FULL registry
+    — sum/count/min/max/mean, the non-scalar argmax (the id slot of the
+    persisted (value, id) pair), and var/std (over the (sum, sumsq,
+    count) slot triple) — on a sliding spec (every open window of every
+    key, not just the last). The flush plans no exchange: it scales
+    with state size, not with the stream."""
     schema = _schema(spark, tx_path)
     src = se.stream_source(spark, tx_path, schema, max_files_per_trigger=1)
     spec = WinSpec("cb", 10, 5)
@@ -700,6 +702,7 @@ def test_stream_cb_eos_flush_restores_batch_parity(spark, tx_path, tdir):
     se.run_available_now(stream, sink, ckpt, timeout_sec=300)
     fired = spark.read.parquet(sink)
     flushed = se.flush_cb_partials(spark, ckpt, "conv_id", spec, aggs=aggs)
+    assert audit.count_exchanges(flushed) == 0, audit.physical_plan(flushed)
     assert flushed.count() > 0  # truncated streams leave open windows
     got = fired.unionByName(flushed).toPandas()
     batch = spark.read.parquet(tx_path).withColumn(
@@ -825,8 +828,7 @@ def test_stream_cb_key_groups_equal_batch(spark, tdir, monkeypatch, on_late):
         se.run_available_now(stream, sink, ckpt, timeout_sec=300)
     finally:
         spark.conf.set(conf, old)
-    flushed = se.flush_cb_partials(spark, ckpt, "conv_id", spec, aggs=_KG_AGGS,
-                                   on_late=on_late)
+    flushed = se.flush_cb_partials(spark, ckpt, "conv_id", spec, aggs=_KG_AGGS)
     got = spark.read.parquet(sink).unionByName(flushed).toPandas()
     want = _kg_batch_want(spark, path, spec)
     cols = ["conv_id", "gwid", "s", "c", "am", "win_end"]
@@ -872,8 +874,7 @@ def test_stream_cb_null_key_equals_batch(spark, tdir, monkeypatch, on_late):
     sink = str(tdir / f"null_key_sink_{on_late}")
     ckpt = str(tdir / f"null_key_ckpt_{on_late}")
     se.run_available_now(stream, sink, ckpt, timeout_sec=300)
-    flushed = se.flush_cb_partials(spark, ckpt, "conv_id", spec, aggs=_KG_AGGS,
-                                   on_late=on_late)
+    flushed = se.flush_cb_partials(spark, ckpt, "conv_id", spec, aggs=_KG_AGGS)
     got = spark.read.parquet(sink).unionByName(flushed).toPandas()
     want = _kg_batch_want(spark, path, spec)
     cols = ["conv_id", "gwid", "s", "c", "am", "win_end"]
@@ -930,8 +931,8 @@ def _long_key_turns(path):
 @pytest.mark.parametrize("on_late", ["drop", "buffer"])
 def test_stream_cb_long_key_equals_batch(spark, tdir, on_late):
     """A non-string key flows through the CB processor, its state and
-    both EOS flush arms: fired ∪ flushed == the batch win_seq result,
-    with the key still a long."""
+    the EOS flush: fired ∪ flushed == the batch win_seq result, with
+    the key still a long."""
     path = str(tdir / f"long_key_src_{on_late}")
     _long_key_turns(path)
     spec = WinSpec("cb", 4, 3)
@@ -943,8 +944,7 @@ def test_stream_cb_long_key_equals_batch(spark, tdir, on_late):
     sink = str(tdir / f"long_key_sink_{on_late}")
     ckpt = str(tdir / f"long_key_ckpt_{on_late}")
     se.run_available_now(stream, sink, ckpt, timeout_sec=300)
-    flushed = se.flush_cb_partials(spark, ckpt, "conv_id", spec, aggs=_KG_AGGS,
-                                   on_late=on_late)
+    flushed = se.flush_cb_partials(spark, ckpt, "conv_id", spec, aggs=_KG_AGGS)
     got = spark.read.parquet(sink).unionByName(flushed).toPandas()
     want = _kg_batch_want(spark, path, spec)
     cols = ["conv_id", "gwid", "s", "c", "am", "win_end"]
@@ -1214,10 +1214,11 @@ def test_stream_cb_argmax_equals_batch(spark, tx_path):
 def test_stream_cb_buffered_eos_flush_parity(spark, tdir):
     """ADVICE r4 (medium): a drain with on_late='buffer' leaves the
     trailing lateness span un-folded in (buf_ids, buf_vals) —
-    flush_cb_partials(on_late='buffer') folds that span first (windows
-    whose last tuple sat in the buffer fire HERE, never double-emitted)
-    then finalizes the remaining partials: fired ∪ flushed == the batch
-    result including partials, even under cross-batch disorder."""
+    flush_cb_partials, told nothing about the drain's policy, folds
+    that span first (windows whose last tuple sat in the buffer fire
+    HERE, never double-emitted) then finalizes the remaining partials:
+    fired ∪ flushed == the batch result including partials, even under
+    cross-batch disorder."""
     import numpy as np
 
     src_dir = str(tdir / "bufeos_src")
@@ -1238,8 +1239,7 @@ def test_stream_cb_buffered_eos_flush_parity(spark, tdir):
     sink, ckpt = str(tdir / "bufeos_sink"), str(tdir / "bufeos_ckpt")
     se.run_available_now(stream, sink, ckpt, timeout_sec=300)
     fired = spark.read.parquet(sink)
-    flushed = se.flush_cb_partials(spark, ckpt, "k", spec, value_col="v",
-                                   on_late="buffer")
+    flushed = se.flush_cb_partials(spark, ckpt, "k", spec, value_col="v")
     fl = flushed.toPandas().sort_values("gwid")
     # the drain fired 0..3 (ripe region ids ≤ 57-12=45); the flush must
     # emit window 4 (full — last tuple was buffered) AND partial 5
@@ -1300,9 +1300,9 @@ def test_register_cb_op_user_fold_end_to_end(spark, tx_path, tdir):
     lambda, win_seq.hpp:63-65): register an argmin (min value, smallest
     id on ties) through register_cb_op — validated for decomposability
     at registration — and run it through the classic CB processor AND
-    the EOS flush (no Catalyst finalizer declared, so the flush must
-    transparently route through the mapInPandas arm): fired ∪ flushed
-    == batch win_seq including partials."""
+    the EOS flush (which finalizes with the same registered
+    ``finalize``): fired ∪ flushed == batch win_seq including
+    partials."""
 
     def _argmin_batch(v, ids, s):
         m = np.minimum.reduceat(v, s)
@@ -1521,8 +1521,8 @@ def test_stream_cb_hll_matches_replay_and_exact(spark, tx_path, tdir):
     deterministic sketch per window (independent hashlib prep +
     register construction), and the estimates sit within the p=6
     envelope of the window-exact distinct counts. Exercises the
-    64-slot state layout end-to-end including the Catalyst EOS flush
-    finalizer (fired ∪ flushed == every window)."""
+    64-slot state layout end-to-end including the EOS flush (fired ∪
+    flushed == every window)."""
     import numpy as np
 
     schema = _schema(spark, tx_path)
@@ -1578,8 +1578,8 @@ def test_quantile_hist_fold_registration_and_semantics():
     lits = se.register_quantile_hist_op(name, lo=0.0, hi=100.0, bins=50, q=0.5)
     try:
         assert lits == {"lo": 0.0, "hi": 100.0, "bins": 50, "w": 2.0, "q": 0.5}
-        n_slots, batch, merge, fin, out_t, cat = se._CB_OPS[name]
-        assert n_slots == 50 and out_t == "double" and cat is None
+        n_slots, batch, merge, fin, out_t = se._CB_OPS[name]
+        assert n_slots == 50 and out_t == "double"
         rng = np.random.default_rng(3)
         vals = rng.uniform(0, 100, 500)
         ids, one = np.arange(500), np.zeros(1, dtype=np.int64)
@@ -1600,9 +1600,8 @@ def test_quantile_hist_fold_registration_and_semantics():
 
 
 def test_stream_cb_histq_matches_replay(spark, tx_path, tdir):
-    """Streaming histogram-quantile windows (fired + the EOS flush via
-    the NO-Catalyst mapInPandas fallback arm) == a pandas replay of the
-    same histogram per window."""
+    """Streaming histogram-quantile windows (fired + the EOS flush) == a
+    pandas replay of the same histogram per window."""
     import numpy as np
 
     name = "histq_t_len"

@@ -13,9 +13,10 @@ from pyspark.sql import functions as F
 
 import oracle
 from tests.conftest import assert_frames_equal
-from windflow_spark.operators.windows import WinSpec, win_seq, tb_window_native
+from windflow_spark.operators.windows import WinSpec, win_seq
 from windflow_spark.operators.pane_farm import pane_farm
 from windflow_spark.operators.win_mapreduce import win_mapreduce
+from windflow_spark.streaming.engine import stream_win_tb
 
 SHAPES = [
     pytest.param(16, 4, id="sliding"),
@@ -112,22 +113,23 @@ def test_gwid_consecutive_per_key(spark, cb_grid):
 
 
 def test_tb_native_window_parity(spark, transcripts):
-    """F.window (native, streaming-compatible) == explode-based win_seq
-    on real timestamps (epoch-micros units)."""
+    """F.window as the streaming TB plan (stream_win_tb) runs it, here
+    over a batch frame, == explode-based win_seq on real timestamps
+    (epoch-micros units): sliding, tumbling and hopping (the
+    tumbling-of-slide path) specs."""
     df = spark.createDataFrame(transcripts)
-    spec_s = WinSpec("tb", 30, 10)  # 30s window, 10s slide
-    native = tb_window_native(
-        df, ["conv_id"], "ts", spec_s,
-        aggs={"cnt": F.count(F.lit(1)), "sum_len": F.sum(F.length("text"))},
-        unit="second",
-    ).toPandas()
-    spec_us = WinSpec("tb", 30_000_000, 10_000_000)
-    exploded = win_seq(
-        df.withColumn("us", F.unix_micros("ts")), ["conv_id"], "us", spec_us,
-        aggs={"cnt": F.count(F.lit(1)), "sum_len": F.sum(F.length("text"))},
-        with_win_end=False,
-    ).toPandas()
-    assert_frames_equal(native, exploded, ["conv_id", "gwid"])
+    aggs = {"cnt": F.count(F.lit(1)), "sum_len": F.sum(F.length("text"))}
+    for win, slide in [(30, 10), (10, 10), (10, 30)]:
+        native = stream_win_tb(
+            df, ["conv_id"], "ts", WinSpec("tb", win, slide), aggs=aggs, unit="second",
+        ).toPandas()
+        exploded = win_seq(
+            df.withColumn("us", F.unix_micros("ts")), ["conv_id"], "us",
+            WinSpec("tb", win * 1_000_000, slide * 1_000_000), aggs=aggs,
+            with_win_end=False,
+        ).toPandas()
+        assert len(native) > 0, (win, slide)
+        assert_frames_equal(native, exploded, ["conv_id", "gwid"])
 
 
 def test_hopping_discards_gap_rows(spark, cb_grid):

@@ -342,33 +342,3 @@ def windowed_count_distinct(
         .groupBy(*keys, GWID)
         .agg(F.count(F.lit(1)).alias("n_distinct"))
     )
-
-
-def tb_window_native(
-    df: DataFrame,
-    keys: Sequence[str],
-    ts_col: str,
-    spec: WinSpec,
-    aggs: dict[str, Column],
-    unit: str = "microsecond",
-) -> DataFrame:
-    """TB windows via Spark's native ``F.window`` (timestamp column).
-
-    Produces the same window set as :func:`assign_wids` with
-    ``unit_col = unix_micros(ts)`` and origin 0 — Spark aligns window
-    starts to multiples of ``slide`` from the epoch. Used on the
-    streaming path where ``F.window`` integrates with watermarks and the
-    state store; gwid is recovered from the window start for parity.
-    """
-    w = F.window(
-        F.col(ts_col),
-        f"{spec.win} {unit}",
-        f"{spec.slide} {unit}",
-    )
-    out = df.groupBy(*[F.col(k) for k in keys], w.alias("w")).agg(
-        *[c.alias(n) for n, c in aggs.items()]
-    )
-    micros_per = {"microsecond": 1, "millisecond": 1_000, "second": 1_000_000}[unit]
-    return out.withColumn(
-        GWID, floordiv(F.unix_micros(F.col("w.start")), spec.slide * micros_per)
-    ).drop("w")

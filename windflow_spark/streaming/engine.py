@@ -7,8 +7,8 @@ Same plan shapes as the batch operators, over ``readStream``:
 - CB (count-based) windows → ``applyInPandasWithState`` key-group
   stateful processor (Spark has no native count windows): grouped by a
   hash bucket of the key, one state row per bucket carries its keys'
-  last ids and open-window partials; windows fire when their last
-  tuple arrives, mirroring Triggerer_CB
+  last ids and open-window partials; a window fires once its key's
+  largest id passes the window's end, mirroring Triggerer_CB
   (reference includes/window.hpp:49-67);
 - stream-stream correlation join → watermarked interval equi-join
   (StreamingSymmetricHashJoin);
@@ -16,8 +16,8 @@ Same plan shapes as the batch operators, over ``readStream``:
   ``availableNow`` trigger drains the backlog and stops; the EOS flush
   of includes/win_seq.hpp:432-474 (partial windows emitted when the
   stream ends) is ``flush_cb_partials`` — a state-store data-source
-  read over the drain's checkpoint that finalizes the still-open
-  windows the processor left in state.
+  read over the drain's checkpoint that runs the processor's own fold
+  and finalize over the state it left.
 
 Watermark semantics vs the reference: the reference DROPS any per-key
 ts regression (includes/win_seq.hpp:289-305); Spark drops only below
@@ -338,11 +338,6 @@ def _var_final(s):
     return max(0.0, s[1] / s[2] - (s[0] / s[2]) ** 2)
 
 
-def _var_cat(p, i):
-    m = p[i] / p[i + 2]
-    return F.greatest(F.lit(0.0), p[i + 1] / p[i + 2] - m * m)
-
-
 # ---- hll64: mergeable approximate count-distinct --------------------
 #
 # A 64-register (p=6) HyperLogLog as a CB fold: registers ARE the
@@ -400,63 +395,40 @@ def _hll_final(s):
     return round(e, 4)
 
 
-def _hll_cat(p, i):
-    regs = F.slice(p, i + 1, _HLL_M)
-    S = F.aggregate(
-        regs, F.lit(0.0), lambda acc, r: acc + F.pow(F.lit(2.0), -r)
-    )
-    V = F.size(F.filter(regs, lambda r: r == F.lit(0.0)))
-    raw = F.lit(_HLL_ALPHA_M2) / S
-    lin = F.lit(float(_HLL_M)) * F.log(F.lit(float(_HLL_M)) / V.cast("double"))
-    return F.round(
-        F.when((raw <= F.lit(_HLL_LINEAR_MAX)) & (V > 0), lin).otherwise(raw), 4
-    )
-
-
 _CB_OPS = {
     # op: (n_slots, batch_kernel(v, ids, starts) -> per-window slot
     #      arrays (contract above), merge(old_slots, new_slots),
-    #      finalize(slots), out_sql_type,
-    #      catalyst_finalize(parts_array_col, slot_pos) -> Column —
-    #          the same finalize over the persisted slot layout, used
-    #          by flush_cb_partials' pure-Catalyst EOS projection)
+    #      finalize(slots), out_sql_type) — the processor fires a window
+    #      and flush_cb_partials emits a partial one with the same finalize
     # count is the segment length (every tuple — the reference's
     # per-row fold counts EVERY tuple); null/NaN values in other ops'
     # input columns are rejected at the operator boundary
     # (_make_cb_fold) rather than folded, so a NaN can't silently
     # diverge from the reference fold.
     "sum": (1, lambda v, i, s: [np.add.reduceat(v, s)],
-            lambda o, n: [o[0] + n[0]], lambda s: s[0], "double",
-            lambda p, i: p[i]),
+            lambda o, n: [o[0] + n[0]], lambda s: s[0], "double"),
     "count": (1, _count_batch, lambda o, n: [o[0] + n[0]],
-              lambda s: int(s[0]), "long", lambda p, i: p[i]),
+              lambda s: int(s[0]), "long"),
     "min": (1, lambda v, i, s: [np.minimum.reduceat(v, s)],
-            lambda o, n: [min(o[0], n[0])], lambda s: s[0], "double",
-            lambda p, i: p[i]),
+            lambda o, n: [min(o[0], n[0])], lambda s: s[0], "double"),
     "max": (1, lambda v, i, s: [np.maximum.reduceat(v, s)],
-            lambda o, n: [max(o[0], n[0])], lambda s: s[0], "double",
-            lambda p, i: p[i]),
+            lambda o, n: [max(o[0], n[0])], lambda s: s[0], "double"),
     "mean": (2, lambda v, i, s: [np.add.reduceat(v, s), *_count_batch(v, i, s)],
              lambda o, n: [o[0] + n[0], o[1] + n[1]],
-             lambda s: s[0] / s[1], "double",
-             lambda p, i: p[i] / p[i + 1]),
+             lambda s: s[0] / s[1], "double"),
     # argmax: the id of the tuple attaining the window max of in_col
     # (ties → smallest id; (value, id) slot pair — the max_by shape the
     # reference folds with an arbitrary INC lambda). Ids are exact in
     # the float64 slot up to 2^53.
-    "argmax": (2, _argmax_batch, _argmax_merge,
-               lambda s: int(s[1]), "long", lambda p, i: p[i + 1]),
+    "argmax": (2, _argmax_batch, _argmax_merge, lambda s: int(s[1]), "long"),
     # var/std: POPULATION variance over the (sum, sumsq, count) slot
-    # TRIPLE (VERDICT r5 #5 — exercises batch kernel, merge, Python
-    # finalize and the Catalyst EOS finalizer across three slots).
-    "var": (3, _var_batch, _var_merge, _var_final, "double", _var_cat),
-    "std": (3, _var_batch, _var_merge,
-            lambda s: _var_final(s) ** 0.5, "double",
-            lambda p, i: F.sqrt(_var_cat(p, i))),
+    # TRIPLE (VERDICT r5 #5 — exercises batch kernel, merge and
+    # finalize across three slots).
+    "var": (3, _var_batch, _var_merge, _var_final, "double"),
+    "std": (3, _var_batch, _var_merge, lambda s: _var_final(s) ** 0.5, "double"),
     # hll64: mergeable approx count-distinct — the registers are the
     # slots (merge = elementwise max); input column must be hll_prep'd
-    "hll64": (_HLL_M, _hll_batch, _hll_merge, _hll_final, "double",
-              _hll_cat),
+    "hll64": (_HLL_M, _hll_batch, _hll_merge, _hll_final, "double"),
 }
 
 
@@ -468,7 +440,6 @@ def register_cb_op(
     merge,
     finalize,
     out_type: str = "double",
-    catalyst=None,
     validate_with=None,
     tol: float = 1e-9,
 ) -> None:
@@ -476,8 +447,10 @@ def register_cb_op(
     — closing the gap to the reference's arbitrary INC lambda
     (win_seq.hpp:63-65): any fold a user can state as (partial slots,
     batch kernel, merge, finalize) plugs into stream_cb_windows and
-    the EOS flush arms exactly like the built-ins (they all read the
-    same registry).
+    flush_cb_partials exactly like the built-ins (both read the same
+    registry, and ``finalize`` computes fired and partial windows
+    alike). A registration is per-process: repeat it in every process
+    that builds or flushes a drain using the op.
 
     - ``n_slots``: float64 partial slots per window.
     - ``batch(v, ids, starts)``: the numpy segment kernel — receives
@@ -490,12 +463,6 @@ def register_cb_op(
     - ``merge(old_slots, new_slots) -> slots``: cross-batch partial
       merge (lists of floats).
     - ``finalize(slots) -> value`` with SQL type ``out_type``.
-    - ``catalyst(parts_col, slot_pos) -> Column`` (optional): the same
-      finalize as a Catalyst expression over the persisted slot
-      arrays. With it, the statestore EOS flush stays a pure scan +
-      projection; without it, ``flush_cb_partials`` transparently
-      routes through the mapInPandas arm (Python finalize over state
-      rows — one row per key bucket, no shuffle, still no replay).
     - ``validate_with`` (recommended): a 1-D float sample. The
       declaration is property-checked for DECOMPOSABILITY before
       registration: for every split point, merging the two halves'
@@ -539,7 +506,7 @@ def register_cb_op(
                     "approximate quantile."
                 )
         finalize(whole)  # must at least run on real partials
-    _CB_OPS[name] = (n_slots, batch, merge, finalize, out_type, catalyst)
+    _CB_OPS[name] = (n_slots, batch, merge, finalize, out_type)
 
 
 def register_quantile_hist_op(
@@ -564,9 +531,8 @@ def register_quantile_hist_op(
     rounded to 4 dp. Every ingredient is exact-integer counts plus
     identically-ordered float arithmetic over SHARED literals (w is
     Python-evaluated once), so a DuckDB oracle recomputes the
-    identical value. No Catalyst finalizer is declared — the EOS flush
-    transparently routes these partials through the mapInPandas arm
-    (the register_cb_op fallback path).
+    identical value. The same finalize emits fired windows and, in
+    flush_cb_partials, the partial ones.
 
     Returns the literals dict {lo, hi, bins, w, q} so gates/oracles
     embed the exact same floats."""
@@ -605,6 +571,24 @@ def register_quantile_hist_op(
                        (0.05, 0.2, 0.2, 0.45, 0.6, 0.8, 0.95)],
     )
     return {"lo": lo_, "hi": hi_, "bins": bins, "w": w, "q": q_}
+
+
+def _cb_aggs(aggs: dict | None, value_col: str | None) -> dict:
+    """The CB ``aggs`` of ``stream_cb_windows`` and ``flush_cb_partials``:
+    ``aggs`` with every op checked against the registry, or the classic
+    {"sum_value": ("sum", value_col), "cnt": ("count", None)} shape."""
+    if aggs is None:
+        if value_col is None:
+            raise ValueError("value_col or aggs required")
+        aggs = {"sum_value": ("sum", value_col), "cnt": ("count", None)}
+    for name, (op, _c) in aggs.items():
+        if op not in _CB_OPS:
+            raise ValueError(
+                f"agg {name!r}: unknown op {op!r} (have {sorted(_CB_OPS)}) "
+                "— a register_cb_op() registration is per-process; re-run "
+                "it in every process that builds or flushes a drain using the op"
+            )
+    return aggs
 
 
 def _cb_ops(aggs: dict) -> list:
@@ -946,13 +930,7 @@ def stream_cb_windows(
     """
     if on_late not in ("assume_ordered", "drop", "buffer"):
         raise ValueError(f"unknown on_late policy {on_late!r}")
-    if aggs is None:
-        if value_col is None:
-            raise ValueError("value_col or aggs required")
-        aggs = {"sum_value": ("sum", value_col), "cnt": ("count", None)}
-    for name, (op, _c) in aggs.items():
-        if op not in _CB_OPS:
-            raise ValueError(f"agg {name!r}: unknown op {op!r} (have {sorted(_CB_OPS)})")
+    aggs = _cb_aggs(aggs, value_col)
     # input columns feeding any fold (count-with-None folds over ids)
     in_cols = sorted({c for _, c in aggs.values() if c is not None})
     n_slots, ops, names = _cb_slots(aggs), _cb_ops(aggs), list(aggs)
@@ -1286,93 +1264,35 @@ def flush_cb_partials(
     spec: WinSpec,
     aggs: dict[str, tuple[str, str | None]] | None = None,
     value_col: str | None = None,
-    on_late: str = "drop",
 ) -> DataFrame:
     """EOS flush of still-open CB windows after a drain — the
     reference's ``eosnotify`` partial-window emission
     (includes/win_seq.hpp:432-474): when the stream ends, every window
-    that never saw its last tuple is computed over what it DID see and
-    emitted. The batch path gets this for free; a streaming
-    ``availableNow`` drain leaves those windows in the state store —
-    this reads them back and finalizes them.
+    that never fired is computed over what it DID see and emitted with
+    the finalize that fires a full one. The batch path gets this for
+    free; a streaming ``availableNow`` drain leaves those windows in the
+    state store — this reads them back and finalizes them.
 
-    Spark-first shape: the state-store DATA SOURCE
-    (``spark.read.format("statestore")``) reads the checkpoint's last
-    committed state snapshot as a DataFrame — and because
-    ``stream_cb_windows`` pops a window from state the moment it fires,
-    whatever remains in a bucket row's ``(wk, wids, parts)`` IS exactly
-    the set of partial windows; ``explode(arrays_zip(...))`` turns them
-    into one row per window and ``element_at(keys, wk + 1)`` names its
-    key. Finalization is pure Catalyst over the slot arrays (the
-    same ``_CB_OPS`` registry layout the processor wrote), so the flush
-    is a distributed scan + projection: no replay, no Python, no
-    driver-side state walk — it scales with state size, not stream
-    length.
+    The state-store DATA SOURCE (``spark.read.format("statestore")``)
+    reads the checkpoint's last committed state, one row per key bucket
+    (``_cb_state_schema``). ``stream_cb_windows`` pops a window from
+    state the moment it fires, so the open windows of a row are exactly
+    the partial ones. Per row, the flush runs the processor's own code:
+    ``_cb_step`` with lateness 0 folds the rows a ``"buffer"`` drain
+    still holds (a window whose last tuple sat in the buffer fires here;
+    the drain never emitted it), then ``_cb_frame`` finalizes every
+    window left open. Under the other policies the buffer is empty and
+    only the finalize runs, so the flush needs no policy argument. One
+    mapInPandas over at most ``_KEY_BUCKETS`` rows: no exchange, no
+    replay — it scales with state size, not stream length.
 
-    Returns the same schema as ``stream_cb_windows`` (key, gwid,
-    aggs..., win_end); union with the drained sink for reference
-    parity on truncated streams. Run AFTER the drain query has stopped
-    (the reader takes the latest committed version).
-
-    ``on_late`` must match the policy the DRAIN ran with. A
-    ``"buffer"`` drain leaves the trailing lateness span of tuples
-    un-folded in (bk, buf_ids, buf_vals); the reference's eosnotify
-    folds those buffered tuples before emitting partials, so the
-    buffered flush first folds the held rows (the processor's own
-    ``_cb_step`` with lateness 0 — windows whose last
-    tuple sat in the buffer fire here, they were never emitted by the
-    drain) and then finalizes every still-open window. That path runs
-    mapInPandas over the state rows (one per bucket, no shuffle — still
-    scales with state size); the default drop/assume_ordered path
-    stays pure Catalyst over the slot arrays.
+    ``aggs``/``value_col`` must be the drain's (resolved as in
+    ``stream_cb_windows``). Returns the schema of ``stream_cb_windows``
+    (key, gwid, aggs..., win_end); union with the drained sink for
+    reference parity on truncated streams. Run AFTER the drain query
+    has stopped (the reader takes the latest committed version).
     """
-    if aggs is None:
-        if value_col is None:
-            raise ValueError("value_col or aggs required")
-        aggs = {"sum_value": ("sum", value_col), "cnt": ("count", None)}
-    if on_late not in ("assume_ordered", "drop", "buffer"):
-        raise ValueError(f"unknown on_late policy {on_late!r}")
-    for name, (op, _c) in aggs.items():
-        if op not in _CB_OPS:
-            raise ValueError(
-                f"agg {name!r}: unknown op {op!r} (have {sorted(_CB_OPS)}) "
-                "— a register_cb_op() registration is per-process; re-run "
-                "it before flushing a drain that used the op"
-            )
-    st = spark.read.format("statestore").option("path", checkpoint).load()
-    if on_late == "buffer" or any(
-        _CB_OPS[op][5] is None for op, _c in aggs.values()
-    ):
-        # buffered drains AND user-registered ops without a Catalyst
-        # finalizer route through the mapInPandas arm (Python finalize
-        # over one state row per bucket, no shuffle; drop/assume_ordered
-        # drains leave the buffer empty so only the finalize runs)
-        return _flush_cb_buffered(st, key, spec, aggs)
-    ex = st.select("value.groupState.*").select(
-        "keys", F.explode(F.arrays_zip("wk", "wids", "parts")).alias("z")
-    ).select(
-        F.element_at("keys", F.col("z.wk").cast("int") + 1).alias(key),
-        F.col("z.wids").alias(GWID),
-        F.col("z.parts").alias("_p"),
-    )
-    out_cols, pos = [], 0
-    for name, (op, _c) in aggs.items():
-        n_slots, _k, _m, _f, sql_t, cat_fin = _CB_OPS[op]
-        out_cols.append(cat_fin(F.col("_p"), pos).cast(sql_t).alias(name))
-        pos += n_slots
-    return ex.select(
-        key,
-        GWID,
-        *out_cols,
-        (F.col(GWID) * spec.slide + spec.win - 1).cast("long").alias("win_end"),
-    )
-
-
-def _flush_cb_buffered(st: DataFrame, key: str, spec: WinSpec, aggs: dict) -> DataFrame:
-    """Buffered-drain EOS flush: fold each bucket's held rows into its
-    open windows (the processor's own ``_cb_step`` with lateness 0, so
-    the same last_id/dedup rule), then finalize everything left open.
-    One state row per bucket → mapInPandas, no exchange."""
+    aggs = _cb_aggs(aggs, value_col)
     in_cols = sorted({c for _, c in aggs.values() if c is not None})
     n_slots, ops, names = _cb_slots(aggs), _cb_ops(aggs), list(aggs)
     fold = _make_cb_fold(spec.win, spec.slide, aggs)
@@ -1390,7 +1310,8 @@ def _flush_cb_buffered(st: DataFrame, key: str, spec: WinSpec, aggs: dict) -> Da
                 if len(done[0]):
                     yield _cb_frame(s.keys, done, ops, names, key, spec)
 
-    rows = st.select("value.groupState.*")
+    rows = (spark.read.format("statestore").option("path", checkpoint).load()
+            .select("value.groupState.*"))
     key_ddl = rows.schema["keys"].dataType.elementType.simpleString()
     return rows.mapInPandas(flush, _cb_out_schema(key, key_ddl, aggs))
 
